@@ -83,7 +83,14 @@ object Bench {
     // record reflects the code, not one bad scheduling window.
     val iterative = Set("gr1_connected_components", "gr2_pagerank",
       "x10_dedup_clusters")
+    // one loadavg sample when half the queries are done: recorded only,
+    // so a run that was quiet at both ends but loaded in the middle
+    // identifies itself (no gate reads it)
+    var done = 0
+    var loadMid = loadStart // an empty selection's middle is its start
     val results = selected.map { case (name, fn) =>
+      if (done == selected.size / 2) loadMid = loadAvg()
+      done += 1
       val runs = if (iterative(name)) 3 else 2
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
@@ -127,7 +134,8 @@ object Bench {
                   else if (wall > 0) cpuSec / wall else 0.0
     val loadEndExt = loadEnd - selfPar
     val health =
-      s""""health":{"load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},""" +
+      s""""health":{"load_start":${fmt(loadStart)},"load_mid":${fmt(loadMid)},""" +
+        s""""load_end":${fmt(loadEnd)},""" +
         s""""load_end_ext":${fmt(loadEndExt)},""" +
         s""""cpu_sec":${fmt(cpuSec)},"wall_sec":${fmt(wall)}}"""
     val total = if (results.nonEmpty) results.values.sum else 0.0

@@ -26,6 +26,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (SplitAggregateRule.scala:108 analog), conf-gated off by default
     // like the reference's table.optimizer.distinct-agg.split.enabled.
     e.injectOptimizerRule(_ => graft.plans.SplitDistinctAggRule)
+    // small final sorts: one partition instead of a sampled range
+    // exchange, decided on AQE's runtime sizes
+    e.injectRuntimeOptimizerRule(_ => graft.plans.SmallGlobalSort)
     e.injectFunction((
       FunctionIdentifier("keyvalue"),
       new ExpressionInfo(classOf[graft.functions.KeyValue].getName, "keyvalue"),

@@ -140,9 +140,16 @@ object GraftGauss {
     * log-pdf. The caller passes the stats array sorted by dim, so the
     * fold order is deterministic (the exploded-join form it replaces
     * summed in nondeterministic join-emission order and relied on the
-    * 6-dp round to absorb it). */
+    * 6-dp round to absorb it). Bit-identical to
+    * `aggregate(st, 0.0, (acc, s) -> acc + (ln(2π·s.v) +
+    * (get(x, s.dim) − s.mu)·(get(x, s.dim) − s.mu)/s.v))`: an empty
+    * stats array folds to 0.0 even for a NULL vector, and a null entry,
+    * a null element at a used dim, a dim out of range or a v ≤ 0 (where
+    * SQL `ln` is NULL) poisons the fold to null. */
   def sum(x: ArrayData, xFloat: Boolean, st: ArrayData): java.lang.Double = {
     val n = st.numElements()
+    if (n == 0) return java.lang.Double.valueOf(0.0)
+    if (x == null) return null
     val xs = x.numElements()
     var acc = 0.0
     var i = 0
@@ -154,8 +161,10 @@ object GraftGauss {
       if (dim < 0 || dim >= xs || x.isNullAt(dim)) return null
       val mu = row.getDouble(1)
       val v = row.getDouble(2)
+      val twoPiV = 2.0 * math.Pi * v
+      if (twoPiV <= 0.0) return null // SQL ln is NULL there, not -Inf/NaN
       val xv = if (xFloat) x.getFloat(dim).toDouble else x.getDouble(dim)
-      acc += math.log(2.0 * math.Pi * v) + (xv - mu) * (xv - mu) / v
+      acc += math.log(twoPiV) + (xv - mu) * (xv - mu) / v
       i += 1
     }
     java.lang.Double.valueOf(acc)
@@ -185,15 +194,31 @@ case class GaussLogSum(left: Expression, right: Expression)
   }
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-  override protected def nullSafeEval(x: Any, st: Any): Any =
-    GraftGauss.sum(x.asInstanceOf[ArrayData], elemFloat,
+  // custom eval: the empty-stats → 0.0 case must win over a NULL
+  // vector, so the vector side cannot go through null-intercepting
+  // nullSafeEval
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val st = right.eval(input)
+    if (st == null) return null
+    GraftGauss.sum(left.eval(input).asInstanceOf[ArrayData], elemFloat,
       st.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, st) =>
-      s"""java.lang.Double ${ev.value}_r = graft.functions.GraftGauss.sum(
-         |  $x, $elemFloat, $st);
-         |if (${ev.value}_r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_r.doubleValue(); }""".stripMargin)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val l = left.genCode(ctx)
+    val r = right.genCode(ctx)
+    ev.copy(code = l.code + r.code +
+      code"""
+        |boolean ${ev.isNull} = ${r.isNull};
+        |double ${ev.value} = 0.0;
+        |if (!${ev.isNull}) {
+        |  java.lang.Double ${ev.value}_r = graft.functions.GraftGauss.sum(
+        |    ${l.isNull} ? null : ${l.value}, $elemFloat, ${r.value});
+        |  if (${ev.value}_r == null) { ${ev.isNull} = true; }
+        |  else { ${ev.value} = ${ev.value}_r.doubleValue(); }
+        |}
+        |""".stripMargin)
+  }
   override protected def withNewChildrenInternal(l: Expression,
       r: Expression): GaussLogSum = copy(left = l, right = r)
 }

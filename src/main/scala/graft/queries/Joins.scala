@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.QueryGroup
+import graft.{QueryGroup, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -344,7 +344,7 @@ object Joins extends QueryGroup {
       // DDL's declared type and rowtime expression are derived from
       // the actual parquet footer rather than hardcoded
       val (tsDdl, rowtimeExpr) =
-        s.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
+        Tables.schemaOf(s, s"$dir/events.parquet")("ts").dataType match {
           case org.apache.spark.sql.types.LongType =>
             ("BIGINT", "TIMESTAMP_MICROS(ts div 1000)")
           case org.apache.spark.sql.types.TimestampNTZType =>
@@ -389,7 +389,7 @@ object Joins extends QueryGroup {
           (col("ts") - expr("INTERVAL 1 SECOND")).as("cutoff"))
         .createOrReplaceTempView("purchases_vt16")
       val (tsDdl, rowtimeExpr) =
-        s.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
+        Tables.schemaOf(s, s"$dir/events.parquet")("ts").dataType match {
           case org.apache.spark.sql.types.LongType =>
             ("BIGINT", "TIMESTAMP_MICROS(ts div 1000)")
           case org.apache.spark.sql.types.TimestampNTZType =>

@@ -38,7 +38,7 @@ object Streaming extends QueryGroup {
     * whatever physical shape the driver generated (see Tables). */
   private def eventStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schemaOf(s, s"$dir/events.parquet")
     Tables.normalizeEventTs(
       s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")

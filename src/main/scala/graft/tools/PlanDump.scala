@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftExtensions, SparkEntry}
+import graft.{GraftExtensions, SparkEntry, Tables}
 import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for selected queries to files — the
@@ -63,9 +63,9 @@ object PlanDump {
           // after plan diff is reproducible: self-join the FULL fact
           // on l_orderkey, then join the high-value cut
           import org.apache.spark.sql.functions._
-          val hv = spark.read.parquet(s"$sfDir/orders.parquet")
+          val hv = Tables(spark, sfDir, "orders")
             .filter(col("o_totalprice") > 490000).select("o_orderkey")
-          val l = spark.read.parquet(s"$sfDir/lineitem.parquet")
+          val l = Tables(spark, sfDir, "lineitem")
             .select("l_orderkey", "l_suppkey")
           val a = l.toDF("ok", "u")
           val b = l.toDF("ok2", "v")

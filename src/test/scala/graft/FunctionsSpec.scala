@@ -96,6 +96,96 @@ class FunctionsSpec extends AnyFunSuite {
     assert(df.collect().forall(r => r.get(0) == r.get(1)))
   }
 
+  /** Rows of `build()` computed twice: with the projection folded into
+    * the local relation by the optimizer (interpreted `eval`), and with
+    * that folding excluded, through whole-stage codegen. */
+  private def interpretedAndCodegen(build: () => org.apache.spark.sql.DataFrame)
+      : Seq[Seq[org.apache.spark.sql.Row]] = {
+    val folded = build().collect().toSeq
+    val generated = StreamHarness.withConfs("spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")(build().collect().toSeq)
+    Seq(folded, generated)
+  }
+
+  /** Asserts kernel column `k` equals HOF column `h`, row by row, on both
+    * evaluation paths, and returns the kernel values by `id`. */
+  private def assertParity(build: () => org.apache.spark.sql.DataFrame): Map[Int, Any] = {
+    val paths = interpretedAndCodegen(build)
+    paths.foreach(_.foreach { r =>
+      assert(r.getAs[Any]("k") == r.getAs[Any]("h"),
+        s"id ${r.getAs[Int]("id")}: kernel ${r.getAs[Any]("k")} vs HOF ${r.getAs[Any]("h")}")
+    })
+    val byId = paths.map(_.map(r => r.getAs[Int]("id") -> r.getAs[Any]("k")).toMap)
+    assert(byId(0) == byId(1), "interpreted and codegen paths disagree")
+    byId(0)
+  }
+
+  test("quant_abs_err_sum kernel: HOF parity incl. empty, null scale, null, float") {
+    // reference = the exact HOF the kernel replaced (v6)
+    def hofQuant(v: org.apache.spark.sql.Column, sc: org.apache.spark.sql.Column) =
+      aggregate(transform(v, x => abs(x.cast("double") - floor(x.cast("double") * sc) / sc)),
+        lit(0.0), (acc, x) => acc + x)
+    val data = spark.sql(
+      """SELECT * FROM VALUES
+        |  (1, array(0.5D, -1.25D, 3.0D, 0.0D), 42.333D),
+        |  (2, CAST(array() AS ARRAY<DOUBLE>), 10.0D),
+        |  (3, CAST(array() AS ARRAY<DOUBLE>), CAST(NULL AS DOUBLE)),
+        |  (4, array(0.5D, NULL, 1.0D), 10.0D),
+        |  (5, CAST(NULL AS ARRAY<DOUBLE>), 10.0D),
+        |  (6, array(0.3D, 0.7D), CAST(NULL AS DOUBLE))
+        |AS t(id, v, sc)""".stripMargin)
+    Seq("array<double>", "array<float>").foreach { tpe =>
+      val k = assertParity(() => data.select(col("id"), col("v").cast(tpe).as("v"), col("sc"))
+        .select(col("id"),
+          call_function("quant_abs_err_sum", col("v"), col("sc")).as("k"),
+          hofQuant(col("v"), col("sc")).as("h")))
+      assert(k(1) != null, tpe)
+      // an empty array folds to the 0.0 init, even under a NULL scale
+      assert(k(2) == 0.0 && k(3) == 0.0, tpe)
+      // a null element, a null array, or a NULL scale over elements → NULL
+      assert(k(4) == null && k(5) == null && k(6) == null, tpe)
+    }
+  }
+
+  test("gauss_log_sum kernel: HOF parity incl. empty, null, dim out of range, float") {
+    // reference = the same Σ over the stats array as an HOF fold
+    def hofGauss(x: org.apache.spark.sql.Column, st: org.apache.spark.sql.Column) =
+      aggregate(st, lit(0.0), (acc, s) => {
+        val d = get(x, s.getField("dim")).cast("double") - s.getField("mu")
+        acc + (ln(lit(2.0 * math.Pi) * s.getField("v")) + d * d / s.getField("v"))
+      })
+    def st(entries: String) = s"CAST(array($entries) AS ARRAY<STRUCT<dim: INT, mu: DOUBLE, v: DOUBLE>>)"
+    val two = "named_struct('dim', 0, 'mu', 0.1D, 'v', 0.5D), " +
+      "named_struct('dim', 2, 'mu', 1.0D, 'v', 2.0D)"
+    val x = "array(0.5D, -1.0D, 2.25D)"
+    val data = spark.sql(
+      s"""SELECT * FROM VALUES
+         |  (1, $x, ${st(two)}),
+         |  (2, $x, ${st("")}),
+         |  (3, CAST(NULL AS ARRAY<DOUBLE>), ${st("")}),
+         |  (4, $x, ${st("named_struct('dim', 3, 'mu', 0.0D, 'v', 1.0D)")}),
+         |  (5, $x, ${st("named_struct('dim', -1, 'mu', 0.0D, 'v', 1.0D)")}),
+         |  (6, array(0.5D, -1.0D, NULL), ${st(two)}),
+         |  (7, array(0.5D, NULL, 2.25D), ${st(two)}),
+         |  (8, CAST(NULL AS ARRAY<DOUBLE>), ${st(two)}),
+         |  (9, $x, CAST(NULL AS ARRAY<STRUCT<dim: INT, mu: DOUBLE, v: DOUBLE>>)),
+         |  (10, $x, ${st(s"$two, NULL")}),
+         |  (11, $x, ${st("named_struct('dim', 1, 'mu', 0.0D, 'v', 0.0D)")})
+         |AS t(id, x, st)""".stripMargin)
+    Seq("array<double>", "array<float>").foreach { tpe =>
+      val k = assertParity(() => data.select(col("id"), col("x").cast(tpe).as("x"), col("st"))
+        .select(col("id"),
+          call_function("gauss_log_sum", col("x"), col("st")).as("k"),
+          hofGauss(col("x"), col("st")).as("h")))
+      assert(k(1) != null && k(7) != null, tpe) // a null element at an unused dim is fine
+      // empty stats fold to the 0.0 init, even for a NULL vector
+      assert(k(2) == 0.0 && k(3) == 0.0, tpe)
+      // dim out of range either way, a null element at a used dim, a null
+      // vector or stats array, a null entry, v = 0 (SQL ln is NULL) → NULL
+      Seq(4, 5, 6, 8, 9, 10, 11).foreach(i => assert(k(i) == null, s"$tpe id $i"))
+    }
+  }
+
   test("SQL registration") {
     GraftFunctions.register(spark)
     val r = spark.sql(

@@ -1,7 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, StandardCopyOption}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-quality assertions: the 100 TB posture is checked here, not
@@ -448,5 +450,120 @@ class PlanSpec extends AnyFunSuite {
       assert(plan.contains("might_contain"),
         s"no runtime bloom filter injected:\n$plan")
     } finally saved.foreach { case (k, v) => v.fold(c.unset(k))(c.set(k, _)) }
+  }
+
+  /** Jobs run collecting `df`, the rows, and the final adaptive plan. */
+  private def collectFinal(df: org.apache.spark.sql.DataFrame)
+      : (Int, Seq[org.apache.spark.sql.Row], String) = {
+    var rows = Seq.empty[org.apache.spark.sql.Row]
+    val jobs = StreamHarness.jobsRun { rows = df.collect().toSeq }
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan.toString
+      case p => p.toString
+    }
+    (jobs, rows, plan)
+  }
+
+  private val excludeSmallSort =
+    "spark.sql.adaptive.optimizer.excludedRules" -> graft.plans.SmallGlobalSort.ruleName
+
+  private def flagTotals = Tables(spark, dir, "lineitem")
+    .groupBy("l_returnflag", "l_linestatus").agg(sum("l_quantity").as("q"))
+    .orderBy("l_returnflag", "l_linestatus")
+
+  test("SmallGlobalSort: a small ORDER BY sorts in one partition, one job fewer") {
+    // the range exchange's RangePartitioner runs a sampling job over its
+    // whole input; a result at or below the broadcast bound is gathered
+    // into one partition instead, which satisfies the ordering
+    val (jobs, rows, plan) = collectFinal(flagTotals)
+    val (jobsOff, rowsOff, planOff) =
+      StreamHarness.withConfs(excludeSmallSort)(collectFinal(flagTotals))
+    assert(!plan.contains("rangepartitioning"), s"range exchange still planned:\n$plan")
+    assert(plan.contains("SinglePartition"), s"no single-partition gather:\n$plan")
+    assert(planOff.contains("rangepartitioning"),
+      s"control plan without the rule has no range exchange:\n$planOff")
+    assert(jobs == jobsOff - 1, s"$jobs jobs with the rule, $jobsOff without")
+    assert(rows.nonEmpty && rows == rowsOff)
+  }
+
+  test("SmallGlobalSort: no gather when the broadcast bound is disabled") {
+    val (_, _, plan) = StreamHarness.withConfs(
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(collectFinal(flagTotals))
+    assert(plan.contains("rangepartitioning"), s"range exchange missing:\n$plan")
+  }
+
+  test("SmallGlobalSort: ORDER BY ... LIMIT keeps TakeOrderedAndProject, no added Exchange") {
+    def top = flagTotals.limit(2)
+    val (_, rows, plan) = collectFinal(top)
+    val (_, rowsOff, planOff) =
+      StreamHarness.withConfs(excludeSmallSort)(collectFinal(top))
+    def exchanges(p: String) = p.linesIterator.count(_.contains("Exchange"))
+    assert(plan.contains("TakeOrderedAndProject"), s"top-k not planned:\n$plan")
+    assert(exchanges(plan) == exchanges(planOff),
+      s"exchange added under the limit:\n$plan\nvs\n$planOff")
+    assert(rows.size == 2 && rows == rowsOff)
+  }
+
+  private val nanosAsLong = SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key
+
+  /** Writes `df`'s rows as the single parquet file `to`. */
+  private def writeSingleFile(df: org.apache.spark.sql.DataFrame, to: Path): Unit = {
+    val out = Files.createTempDirectory("tables-spec-out")
+    df.coalesce(1).write.mode("overwrite").parquet(out.toString)
+    val part = Files.list(out).filter(_.getFileName.toString.endsWith(".parquet"))
+      .findFirst().get
+    Files.copy(part, to, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("Tables.schemaOf equals Spark's inferred schema for every table") {
+    StreamHarness.withConfs(nanosAsLong -> "true") {
+      Tables.all.foreach { t =>
+        val p = s"$dir/$t.parquet"
+        assert(Tables.schemaOf(spark, p) == spark.read.parquet(p).schema, t)
+      }
+    }
+  }
+
+  test("Tables.schemaOf runs no Spark job, on a first read or a second") {
+    val tmp = Files.createTempDirectory("tables-spec")
+    val file = tmp.resolve("t.parquet")
+    import spark.implicits._
+    writeSingleFile(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), file)
+    val first = StreamHarness.jobsRun { Tables.schemaOf(spark, file.toString) }
+    val second = StreamHarness.jobsRun {
+      Tables.schemaOf(spark, file.toString)
+      Tables(spark, tmp.toString, "t")
+    }
+    assert(first == 0 && second == 0, s"$first jobs on the first read, $second on the second")
+  }
+
+  test("Tables.schemaOf: a rewritten file is read with its new schema") {
+    val tmp = Files.createTempDirectory("tables-spec")
+    val file = tmp.resolve("t.parquet")
+    import spark.implicits._
+    writeSingleFile(Seq((1L, "a")).toDF("k", "s"), file)
+    assert(Tables(spark, tmp.toString, "t").columns.toSeq == Seq("k", "s"))
+    writeSingleFile(Seq((7, 2.5, true)).toDF("x", "y", "z"), file)
+    assert(Tables.schemaOf(spark, file.toString).fieldNames.toSeq == Seq("x", "y", "z"))
+    val row = Tables(spark, tmp.toString, "t").head()
+    assert(row.getInt(0) == 7 && row.getDouble(1) == 2.5 && row.getBoolean(2))
+  }
+
+  test("Tables.schemaOf: the memo key follows the conversion confs") {
+    val p = s"$dir/events.parquet"
+    val on = StreamHarness.withConfs(nanosAsLong -> "true")(Tables.footerKey(spark, p))
+    val off = StreamHarness.withConfs(nanosAsLong -> "false")(Tables.footerKey(spark, p))
+    assert(on != off && on.copy(conversion = off.conversion) == off)
+    // a flipped conf that changes the conversion is not served from the memo
+    val ntz = SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key
+    Seq("true", "false").foreach { v =>
+      StreamHarness.withConfs(ntz -> v) {
+        assert(Tables.schemaOf(spark, p)("ts").dataType ==
+          spark.read.parquet(p).schema("ts").dataType, s"$ntz=$v")
+      }
+    }
+    assert(StreamHarness.withConfs(ntz -> "false")(Tables.schemaOf(spark, p)("ts").dataType) !=
+      StreamHarness.withConfs(ntz -> "true")(Tables.schemaOf(spark, p)("ts").dataType))
   }
 }

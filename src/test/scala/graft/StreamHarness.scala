@@ -51,6 +51,46 @@ object StreamHarness {
     spark.table(name)
   }
 
+  /** Number of Spark jobs `body` starts on the shared session, counted
+    * by a listener under a job group of its own. Listener delivery is
+    * asynchronous, so a one-task fence job in a second group runs after
+    * `body`: once the listener has seen the fence start, every earlier
+    * job start has been delivered too. */
+  def jobsRun(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val id = System.nanoTime
+    val (group, fence) = (s"jobs-run-$id", s"jobs-fence-$id")
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => counted.incrementAndGet()
+          case `fence` => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(fence, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the fence job")
+      counted.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Runs `body` with the session confs in `kv` set, then restores them. */
+  def withConfs[T](kv: (String, String)*)(body: => T): T = {
+    val c = spark.conf
+    val saved = kv.map { case (k, _) => k -> c.getOption(k) }
+    kv.foreach { case (k, v) => c.set(k, v) }
+    try body finally saved.foreach { case (k, v) => v.fold(c.unset(k))(c.set(k, _)) }
+  }
+
   /** Micro helper: seconds → micros, building GEvents tersely. */
   def ev(key: Long, tSec: Long, id: Long, kind: String = "x",
          value: Double = 0.0): GEvent =
