@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 1-minute system load average — from /proc/loadavg (Linux) with an
     * MXBean fallback. A bench recorded while the host was saturated by
@@ -24,40 +23,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // JVM/codegen warmup outside the timed region so the first timed
     // query doesn't absorb JIT + session initialization.
     SparkEntry.entry(spark).count()
     // two timed runs per query, report the min — first-run codegen/JIT
     // noise otherwise dominates sub-second queries.
     // SPARK_GRAFT_ONLY=x6_ngram_jaccard,x9_simhash_neardup → time just
-    // those queries (iteration aid; the driver never sets it).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.trim.nonEmpty)
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    // Job-boundary cleanup between queries: operators persist() for
-    // intra-query reuse (shingle tables, changelogs, graph edges) and
-    // the blocks must not outlive the query — in a 139-query session
-    // the leaked cache steadily degrades later queries (measured 7× on
-    // g3) exactly as it would evict useful blocks on a shared cluster.
-    def releaseCaches(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    // those queries (an iteration aid, never the full record).
+    val only = GraftSession.only
+    val selected = GraftSession.selected()
     val loadStart = loadAvg()
     val cpuStart = processCpuSec()
     val wallStart = System.nanoTime()
@@ -96,7 +71,7 @@ object Bench {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
         val dt = (System.nanoTime() - t0) / 1e9
-        releaseCaches()
+        GraftSession.releaseCaches(spark)
         dt
       }
       name -> times.min

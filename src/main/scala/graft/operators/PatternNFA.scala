@@ -138,10 +138,22 @@ import org.apache.spark.sql.functions._
   *    both branches); One-steps stay committed to their earliest
   *    completing candidate (the engine's pinned determinism).
   *
-  * Execution: one shuffle on the key, per-key event-time sort, linear
-  * scan with bounded backtracking — the keyed-state access pattern of
-  * the streaming variant (graft.streaming.StreamingCEP implements the
-  * 2-step case incrementally).
+  * Execution: ONE per-anchor scan ([[AnchorScan]]) decides every
+  * anchor — whether it may start a match, the committed match or the
+  * NoSkip enumeration, the skip point, the timed-out prefix and the
+  * per-branch timeouts — for the batch doors and the streaming
+  * operator alike. The two runners differ only in the signal that an
+  * anchor's window is complete, so that it may be offered:
+  *  - batch ([[scanSortedPartition]]): one shuffle on the key, a
+  *    per-key (ts, id) sort, then a forward pass that offers an anchor
+  *    once a later event has passed its deadline or the key has ended;
+  *  - streaming ([[scanMature]], driven by
+  *    graft.streaming.StreamingMatchRecognize over its keyed state
+  *    buffer): once the watermark has passed anchor.ts + within.
+  * Either way every event the window could bind is final when the
+  * anchor is offered, so both emit the same rows for the same input.
+  * (graft.streaming.StreamingCEP and SimpleCEP remain as separate
+  * two-step engines; see ROADMAP.)
   */
 object PatternNFA {
 
@@ -466,8 +478,9 @@ object PatternNFA {
 
   /** kind-equality surface compiled onto the predicate NFA: one
     * variable per distinct kind (incl. OneOrMore until-kinds),
-    * group sub-step kinds included. */
-  private def kindPreds(steps: Seq[Step]): Seq[(String, org.apache.spark.sql.Column)] = {
+    * group sub-step kinds included. The streaming pattern doors use it
+    * too, so both accept the same steps. */
+  private[graft] def kindPreds(steps: Seq[Step]): Seq[(String, org.apache.spark.sql.Column)] = {
     def kindsOf(ss: Seq[Step]): Seq[String] = ss.flatMap { st =>
       st.quant match {
         case g: GroupTimes => kindsOf(g.sub) ++ g.untilKind.toSeq
@@ -519,22 +532,17 @@ object PatternNFA {
     * fires. Batch form = complete-input retrospect of that timer.
     * Completed runs emit nothing here (they are [[run]]'s output);
     * the skip mark advances on full matches for EVERY strategy exactly
-    * as in the main scan (the shared [[scanSortedPartition]] drives
-    * both), so this side output sees the same offered anchors the main
-    * output does — the documented symmetry with [[matureTimeouts]]. */
+    * as in the main scan (one [[AnchorScan]] decides both), so this
+    * side output sees the same offered anchors the main output does —
+    * in batch and in the streaming timeout door alike. */
   def runTimeouts(spark: SparkSession, events: DataFrame, steps: Seq[Step],
                   withinMicros: Long,
                   afterMatch: AfterMatch = SkipToNextRow,
                   bufGauge: Option[org.apache.spark.util.LongAccumulator] = None)
       : DataFrame = {
     import spark.implicits._
-    val (isteps, ds) = prepare(events, steps, kindPreds(steps), Nil, Map.empty)
-    sortedByKey(ds).mapPartitions { it =>
-      scanSortedPartition[PTimeout](it, isteps, withinMicros, afterMatch,
-        collectTimeouts = true, bufGauge, wantMatches = false)(
-        (_, _, _) => Nil,
-        (_, t, _) => Seq(t))
-    }.toDF()
+    drive[PTimeout](events, steps, kindPreds(steps), withinMicros, afterMatch,
+      ScanMode.Timeouts, bufGauge = bufGauge)(onTimeout = (_, t, _) => Seq(t))
   }
 
   /** EVERY live partial branch per expiry (flink-cep NFA.advanceTime /
@@ -559,23 +567,15 @@ object PatternNFA {
   def runTimeoutBranches(spark: SparkSession, events: DataFrame,
                          steps: Seq[Step], withinMicros: Long): DataFrame = {
     import spark.implicits._
-    require(steps.length >= 2,
-      "runTimeoutBranches needs at least two steps (a single-step " +
-        "pattern completes on its anchor — nothing can time out)")
-    // branchShape rejects unsupported quantifiers (until-loops,
-    // groups) loudly at compile; r13 extended the door to loop
-    // interiors (the r12 guard was One/AnyOne/Next only)
     validateBranchShapes(steps)
-    val (isteps, ds) = prepare(events, steps, kindPreds(steps), Nil, Map.empty)
-    sortedByKey(ds).mapPartitions { it =>
-      scanSortedPartition[PTimeoutB](it, isteps, withinMicros, NoSkip,
-        collectTimeouts = true, None, wantMatches = false,
-        branchTimeoutMode = true)(
-        (_, _, _) => Nil,
-        (_, t, dl) => Seq(PTimeoutB(t.key, t.anchor_id, t.last_id,
-          t.chain, t.n_bound, dl)))
-    }.toDF()
+    drive[PTimeoutB](events, steps, kindPreds(steps), withinMicros, NoSkip,
+      ScanMode.Branches)(onTimeout = branchRow)
   }
+
+  /** A per-branch timeout stamped with its anchor's deadline. */
+  private[graft] val branchRow: (Long, PTimeout, Long) => Seq[PTimeoutB] =
+    (_, t, deadline) => Seq(PTimeoutB(t.key, t.anchor_id, t.last_id, t.chain,
+      t.n_bound, deadline))
 
   /** (entry relation, interior relation, lo, hi) of a step for the
     * branch-timeout simulation. Relations: 'R' = SKIP_TILL_NEXT
@@ -607,12 +607,17 @@ object PatternNFA {
         "door — use runTimeouts' longest-prefix digest)")
   }
 
-  /** Driver-side quantifier validation for the branch-timeout doors:
-    * lets operator CONSTRUCTION fail fast on unsupported shapes
-    * (until-loops, groups) instead of surfacing branchShape's
-    * sys.error inside executor tasks on the first micro-batch. */
-  private[graft] def validateBranchShapes(steps: Seq[Step]): Unit =
+  /** Construction-time validation for the branch-timeout doors (batch and
+    * streaming): lets operator CONSTRUCTION fail fast on a single-step
+    * pattern and on unsupported shapes (until-loops, groups) instead
+    * of surfacing branchShape's sys.error inside executor tasks on the
+    * first micro-batch. */
+  private[graft] def validateBranchShapes(steps: Seq[Step]): Unit = {
+    require(steps.length >= 2,
+      "per-branch timeouts need at least two steps (a single-step " +
+        "pattern completes on its anchor — nothing can time out)")
     steps.foreach(s => branchShape(s.quant))
+  }
 
   /** Live partial branches of anchor `a` at its expiry — the forward
     * simulation behind [[runTimeoutBranches]], generalized to LOOP
@@ -777,24 +782,6 @@ object PatternNFA {
     * (inclusive) the (ts, id) point. */
   private[graft] final case class Mark(ts: Long, id: Long, inclusive: Boolean)
 
-  /** Streaming twin of [[runTimeouts]]'s per-key scan (the shape
-    * [[matchesMature]] is to [[run]]): timed-out partials for MATURE
-    * anchors only — anchor.ts + within <= watermark, when the window
-    * is provably complete — with the skip mark advanced by FULL
-    * matches exactly as the main scan advances it, so the timeout
-    * stream sees the same offered anchors. */
-  private[graft] def matureTimeouts(
-      key: Long, quads: Seq[(Long, Long, Long, Array[Double], Array[String])],
-      steps: Seq[Step], varNames: Seq[String], withinMicros: Long,
-      afterMatch: AfterMatch, wmMicros: Long, minStart: Option[Mark],
-      ctx: Map[String, Seq[CtxCmp]] = Map.empty, strict: Boolean = false)
-      : (Seq[PTimeout], Option[Mark]) = {
-    val (_, tmos, mark) = matureScan(key, quads, steps, varNames,
-      withinMicros, afterMatch, wmMicros, minStart, ctx,
-      collectTimeouts = true, strict = strict)
-    (tmos, mark)
-  }
-
   /** General row-pattern matching: each variable in `varPreds` is an
     * arbitrary boolean Column over the event row (the reference
     * compiles DEFINE predicates the same way —
@@ -830,14 +817,9 @@ object PatternNFA {
                     untilCtx: Map[String, Seq[CtxCmp]] = Map.empty)
       : DataFrame = {
     import spark.implicits._
-    val (isteps, ds) = prepare(events, steps, varPreds, navCols, ctx, strict,
-      untilCtx)
-    sortedByKey(ds).mapPartitions { it =>
-      scanSortedPartition[PMatch](it, isteps, withinMicros, afterMatch,
-        collectTimeouts = false, bufGauge, strict = strict)(
-        (key, bindings, _) => Seq(emit(key, isteps, bindings)),
-        (_, _, _) => Nil)
-    }.toDF()
+    drive[PMatch](events, steps, varPreds, withinMicros, afterMatch,
+      ScanMode.Matches, navCols, ctx, untilCtx, strict, bufGauge)(
+      onMatch = (key, m, _) => Seq(m.row(key)))
   }
 
   /** [[runPredicates]] in exploded per-binding form: one [[BindingRow]]
@@ -857,27 +839,35 @@ object PatternNFA {
                             strict: Boolean = false)
       : DataFrame = {
     import spark.implicits._
-    val (isteps, ds) = prepare(events, steps, varPreds, navCols, ctx, strict)
+    drive[BindingRow](events, steps, varPreds, withinMicros, afterMatch,
+      ScanMode.Matches, navCols, ctx, strict = strict, bufGauge = bufGauge)(
+      onMatch = (key, m, matchNo) => m.bindingRows(key, matchNo))
+  }
+
+  /** The batch runner behind the four `run*` doors above:
+    * [[prepare]] the events, shuffle and sort them per key
+    * ([[sortedByKey]]), and scan each partition
+    * ([[scanSortedPartition]]) with one [[AnchorScan]]. */
+  private def drive[O: org.apache.spark.sql.Encoder](
+      events: DataFrame, steps: Seq[Step],
+      varPreds: Seq[(String, org.apache.spark.sql.Column)],
+      withinMicros: Long, afterMatch: AfterMatch, mode: ScanMode,
+      navCols: Seq[String] = Nil, ctx: Map[String, Seq[CtxCmp]] = Map.empty,
+      untilCtx: Map[String, Seq[CtxCmp]] = Map.empty, strict: Boolean = false,
+      bufGauge: Option[org.apache.spark.util.LongAccumulator] = None)(
+      onMatch: (Long, Matched, Long) => Seq[O] = noRows,
+      onTimeout: (Long, PTimeout, Long) => Seq[O] = noRows): DataFrame = {
+    val (isteps, ds) = prepare(events, steps, varPreds, navCols, ctx, strict,
+      untilCtx)
     sortedByKey(ds).mapPartitions { it =>
-      scanSortedPartition[BindingRow](it, isteps, withinMicros, afterMatch,
-        collectTimeouts = false, bufGauge, strict = strict)(
-        (key, bindings, matchNo) => {
-          // in strict mode an optional first step may bind nothing —
-          // the anchor is the first BOUND row
-          val anchorId = bindings.find(_.nonEmpty).get.head.id
-          isteps.zip(bindings).flatMap { case (st, bound) =>
-            bound.map(e =>
-              BindingRow(key, matchNo, anchorId, st.name, e.id, e.idx))
-          }
-        },
-        (_, _, _) => Nil)
+      scanSortedPartition(it, new AnchorScan(isteps, withinMicros, afterMatch,
+        strict, mode, onMatch, onTimeout), bufGauge)
     }.toDF()
   }
 
-  /** Common front half of the run shapes: validate, resolve steps onto
-    * variable bits, resolve context predicates onto step indices, and
-    * project events down to the NFA's (key, ts, id, bitmask, nav)
-    * dataset with row-local predicates pre-evaluated map-side. */
+  /** The emitter of an output the door does not produce. */
+  private[graft] def noRows[A, O]: (Long, A, Long) => Seq[O] = (_, _, _) => Nil
+
   /** Which navigation columns are STRING-typed in `events` — those
     * ride the scan in the parallel string array (same index space;
     * their numeric slot holds NaN and vice versa). */
@@ -906,6 +896,10 @@ object PatternNFA {
     (navD, navS)
   }
 
+  /** Common front half of the run shapes: validate, resolve steps onto
+    * variable bits, resolve context predicates onto step indices, and
+    * project events down to the NFA's (key, ts, id, bitmask, nav)
+    * dataset with row-local predicates pre-evaluated map-side. */
   private def prepare(events: DataFrame, steps: Seq[Step],
                       varPreds: Seq[(String, org.apache.spark.sql.Column)],
                       navCols: Seq[String], ctx: Map[String, Seq[CtxCmp]],
@@ -1579,183 +1573,182 @@ object PatternNFA {
   // pinned window-bounded semantics, so `evs` is never indexed there
   // (cand.idx - off < anchorIdx = cand.idx for off >= 1).
 
-  /** Incremental per-key scan for the STREAMING runtime
-    * ([[graft.streaming.StreamingMatchRecognize]]): run the identical
-    * NFA over a state buffer of (tsMicros, id, satMask, nav) quads,
-    * but offer ONLY MATURE anchors — those whose whole window is
-    * final, i.e. anchor.ts + within <= watermark — so every emitted
-    * match is exactly what the batch scan would emit over the complete
-    * input (events with ts <= watermark can no longer arrive).
-    * `minStart` is the skip high-water [[Mark]] carried in state; the
-    * updated mark is returned with the matches. */
-  private[graft] def matchesMature(
-      key: Long, quads: Seq[(Long, Long, Long, Array[Double], Array[String])],
-      steps: Seq[Step], varNames: Seq[String], withinMicros: Long,
-      afterMatch: AfterMatch, wmMicros: Long, minStart: Option[Mark],
-      ctx: Map[String, Seq[CtxCmp]] = Map.empty, strict: Boolean = false,
-      untilCtx: Map[String, Seq[CtxCmp]] = Map.empty)
-      : (Seq[PMatch], Option[Mark]) = {
-    val (raw, _, mark) = matureScan(key, quads, steps, varNames, withinMicros,
-      afterMatch, wmMicros, minStart, ctx, collectTimeouts = false,
-      strict = strict, untilCtx = untilCtx)
-    val isteps = compileByName(steps, varNames, ctx, untilCtx)
-    (raw.map { bindings => emit(key, isteps, bindings) }, mark)
+  /** What a scan emits: the matches, the longest timed-out prefix of
+    * every offered anchor that does not match ([[runTimeouts]]), or
+    * every live branch at each offered anchor's expiry
+    * ([[runTimeoutBranches]]). The prefix mode still decides matches:
+    * they move the skip point. */
+  private[graft] sealed trait ScanMode
+  private[graft] object ScanMode {
+    case object Matches extends ScanMode
+    case object Timeouts extends ScanMode
+    case object Branches extends ScanMode
   }
 
-  /** [[matchesMature]] in raw-binding form for the streaming MEASURES
-    * path: per emitted match, the per-step bound events as (ts, id)
-    * pairs in sequence order. Same maturity/eviction/skip contract. */
-  private[graft] def matureBindingsRaw(
-      quads: Seq[(Long, Long, Long, Array[Double], Array[String])], steps: Seq[Step],
-      varNames: Seq[String], withinMicros: Long, afterMatch: AfterMatch,
-      wmMicros: Long, minStart: Option[Mark],
-      ctx: Map[String, Seq[CtxCmp]] = Map.empty, strict: Boolean = false)
-      : (Seq[Seq[Seq[(Long, Long)]]], Option[Mark]) = {
-    val (raw, _, mark) = matureScan(0L, quads, steps, varNames, withinMicros,
-      afterMatch, wmMicros, minStart, ctx, collectTimeouts = false,
-      strict = strict)
-    (raw.map(_.map(_.map(e => (e.ts, e.id)))), mark)
-  }
-
-  private def compileByName(steps: Seq[Step], varNames: Seq[String],
-                            ctx: Map[String, Seq[CtxCmp]],
-                            untilCtx: Map[String, Seq[CtxCmp]] = Map.empty)
-      : Seq[INode] = {
-    val bitOf = varNames.zipWithIndex.toMap
-    compile(steps, bitOf, ctx, untilCtx)
-  }
-
-  /** Streaming twin of [[runTimeoutBranches]] (the shape
-    * [[matureTimeouts]] is to [[runTimeouts]]): per-branch timeouts
-    * for MATURE anchors only — anchor.ts + within <= watermark — each
-    * stamped with the anchor's deadline. Match status never
-    * suppresses and no skip mark applies (NoSkip, the reference's
-    * timeout contract), so no mark threads through. An anchor is
-    * scanned exactly once across invocations: maturity bound ==
-    * eviction bound in the streaming operator. */
-  private[graft] def matureTimeoutBranches(
-      key: Long, quads: Seq[(Long, Long, Long, Array[Double], Array[String])],
-      steps: Seq[Step], varNames: Seq[String], withinMicros: Long,
-      wmMicros: Long): Seq[PTimeoutB] = {
-    val isteps = compileByName(steps, varNames, Map.empty)
-    val evs = quads.toVector.sortBy(t => (t._1, t._2))
-      .zipWithIndex.map { case ((ts, id, s, nv, ns), i) =>
-        Ev(ts, id, s, i, nv, ns) }
-    val seq = new VecEvs(evs)
-    val out = Vector.newBuilder[PTimeoutB]
-    evs.foreach { a =>
-      if (anchorOk(a, isteps) && a.ts + withinMicros <= wmMicros) {
-        val deadline = a.ts + withinMicros
-        branchTimeouts(key, seq, isteps, a, deadline).foreach(t =>
-          out += PTimeoutB(t.key, t.anchor_id, t.last_id, t.chain,
-            t.n_bound, deadline))
+  /** One emitted match as the scan hands it to an output shape. */
+  private[graft] final class Matched private[PatternNFA] (
+      isteps: Seq[INode], bindings: Vector[Vector[Ev]]) {
+    /** The chain/counts row of [[run]] (see [[emit]]). */
+    def row(key: Long): PMatch = emit(key, isteps, bindings)
+    /** One [[BindingRow]] per bound event. */
+    def bindingRows(key: Long, matchNo: Long): Seq[BindingRow] = {
+      // in strict mode an optional first step may bind nothing — the
+      // anchor is the first BOUND row
+      val anchorId = bindings.find(_.nonEmpty).get.head.id
+      isteps.zip(bindings).flatMap { case (st, bound) =>
+        bound.map(e => BindingRow(key, matchNo, anchorId, st.name, e.id, e.idx))
       }
     }
-    out.result()
+    /** Per step, the bound events as (ts, id) in sequence order. */
+    def pairs: Seq[Seq[(Long, Long)]] = bindings.map(_.map(e => (e.ts, e.id)))
   }
 
-  /** ONE mature-anchor scan serving both streaming side outputs —
-    * matches and timed-out partials share the anchor-offering, the
-    * maturity bound, and the skip-mark discipline BY CONSTRUCTION (a
-    * drift between two copies would silently break the documented
-    * same-offered-anchors contract). The prefix search for timeout
-    * partials costs extra matchFrom calls, so it only runs when
-    * `collectTimeouts` is set. */
-  private def matureScan(
-      key: Long, quads: Seq[(Long, Long, Long, Array[Double], Array[String])],
-      steps: Seq[Step], varNames: Seq[String], withinMicros: Long,
-      afterMatch: AfterMatch, wmMicros: Long, minStart: Option[Mark],
-      ctx: Map[String, Seq[CtxCmp]], collectTimeouts: Boolean,
-      strict: Boolean = false,
-      untilCtx: Map[String, Seq[CtxCmp]] = Map.empty)
-      : (Seq[Vector[Vector[Ev]]], Seq[PTimeout], Option[Mark]) = {
-    val isteps = compileByName(steps, varNames, ctx, untilCtx)
-    val hasCtx = anyCtx(isteps)
-    val startMask = if (strict) strictStartMask(isteps) else 0L
-    val evs = quads.toVector.sortBy(t => (t._1, t._2))
-      .zipWithIndex.map { case ((ts, id, s, nv, ns), i) =>
-        Ev(ts, id, s, i, nv, ns) }
-    // the streaming buffer is already WITHIN-bounded by eviction, so a
-    // plain indexed view suffices here
-    val seq = new VecEvs(evs)
-    val out = Vector.newBuilder[Vector[Vector[Ev]]]
-    val tmos = Vector.newBuilder[PTimeout]
-    var mark = minStart
-    def afterMark(e: Ev): Boolean = mark.forall { m =>
-      if (m.inclusive) e.ts > m.ts || (e.ts == m.ts && e.id >= m.id)
-      else e.ts > m.ts || (e.ts == m.ts && e.id > m.id)
-    }
-    val enumerateAll = afterMatch == NoSkip
-    require(strict || !(hasLoopFirst(isteps) && collectTimeouts),
+  /** The per-anchor decision, the one piece of the scan the batch and
+    * streaming runners share. The runners differ only in when they
+    * know an anchor's window is complete and so may offer it: the
+    * batch iterator ([[scanSortedPartition]]) once a later event has
+    * passed the deadline or the key has ended, the streaming operator
+    * ([[scanMature]]) once the watermark has passed anchor.ts + within.
+    * For an offered anchor (startable, at or past the skip point) it
+    * emits the committed match or, under NoSkip, every completion;
+    * advances the skip point for SkipPastLastEvent, SkipToFirst and
+    * SkipToLast; and in the timeout modes emits the timed-out prefix
+    * or every live branch. */
+  private final class AnchorScan[O](
+      isteps: Seq[INode], val withinMicros: Long, afterMatch: AfterMatch,
+      strict: Boolean, mode: ScanMode,
+      onMatch: (Long, Matched, Long) => Seq[O],
+      onTimeout: (Long, PTimeout, Long) => Seq[O]) {
+    private val hasCtx = anyCtx(isteps)
+    private val enumerateAll = afterMatch == NoSkip
+    require(!(strict && enumerateAll),
+      "strict row-pattern mode has no NoSkip/followedByAny form " +
+        "(no MATCH_RECOGNIZE clause produces them)")
+    require(strict || !(hasLoopFirst(isteps) && mode != ScanMode.Matches),
       "timeout side outputs do not support loop-first patterns")
     if (!strict) checkZeroLoopFirst(isteps)
-    // a skip mark only ever advances (the reference prunes by START
-    // id; an earlier pruning id from a later match prunes a subset of
-    // what is already consumed — never re-admits)
-    def advanceTo(t: Ev): Unit = {
-      val nm = Mark(t.ts, t.id, inclusive = true)
-      val keep = mark.exists { m =>
-        m.ts > nm.ts || (m.ts == nm.ts && m.id > nm.id)
+    private val startMask = if (strict) strictStartMask(isteps) else 0L
+    /** The skip point: the first index an anchor may start at, and the
+      * same point as the (ts, id) [[Mark]] streaming state carries. */
+    var minAnchorIdx = 0
+    var mark: Option[Mark] = None
+    private var matchNo = 0L
+
+    /** Strict attempts start at any row the start mask admits (the
+      * attempt itself re-checks context predicates). */
+    def startable(e: Ev): Boolean =
+      if (strict) (e.sat & startMask) != 0 else anchorOk(e, isteps)
+
+    def reset(): Unit = { minAnchorIdx = 0; mark = None; matchNo = 0L }
+
+    /** Moves the skip point to `t` (past it unless `inclusive`). It
+      * only ever advances: the reference prunes by START id, and an
+      * earlier target from a later match prunes a subset of what is
+      * already consumed. */
+    private def skipTo(t: Ev, inclusive: Boolean): Unit = {
+      val idx = if (inclusive) t.idx else t.idx + 1
+      if (idx >= minAnchorIdx) {
+        minAnchorIdx = idx; mark = Some(Mark(t.ts, t.id, inclusive))
       }
-      if (!keep) mark = Some(nm)
     }
-    evs.foreach { a =>
-      val startable =
-        if (strict) (a.sat & startMask) != 0 else anchorOk(a, isteps)
-      if (startable && afterMark(a) &&
-          a.ts + withinMicros <= wmMicros) {
-        val deadline = a.ts + withinMicros
-        if (enumerateAll) {
-          require(!strict, "strict row-pattern mode has no NoSkip/" +
-            "followedByAny form")
-          val all = enumFromAnchor(seq, isteps, a, deadline, hasCtx).toVector
-          if (all.nonEmpty) all.foreach(out += _)
-          else if (collectTimeouts)
-            tmos += timeoutPartial(key, seq, isteps, a, deadline, hasCtx)
-        } else {
-          // committed scan: ONE match per offered anchor — the
-          // earliest completion (the reference emits it first and its
-          // prune then discards the anchor's sibling branches, which
-          // all share the start event). Loop-first / ANY-branching
-          // patterns take the first enumerated completion.
-          val res =
-            if (strict)
-              strictFrom(seq, isteps, strictPrev(a), deadline, a.idx,
-                Vector.empty)
-            else if (hasLoopFirst(isteps))
-              enumFromAnchor(seq, isteps, a, deadline, hasCtx).nextOption()
-            else matchFrom(seq, isteps.drop(1), a, deadline, a.idx,
-              Vector(Vector(a)), hasCtx, tMin = true).map(Vector(Vector(a)) ++ _)
-          res match {
+
+    def offer(key: Long, evs: EvSeq, a: Ev,
+              out: scala.collection.mutable.Growable[O]): Unit = {
+      if (a.idx < minAnchorIdx) return
+      val deadline = a.ts + withinMicros
+      def timedOut(t: PTimeout): Unit = out ++= onTimeout(key, t, deadline)
+      def matched(bindings: Vector[Vector[Ev]]): Unit = {
+        matchNo += 1
+        if (mode == ScanMode.Matches)
+          out ++= onMatch(key, new Matched(isteps, bindings), matchNo)
+      }
+      if (mode == ScanMode.Branches)
+        // per-branch expiry emission: match status never suppresses
+        // (the reference expires an anchor's stays even when it also
+        // fully matched), and NoSkip means no skip-point bookkeeping
+        branchTimeouts(key, evs, isteps, a, deadline).foreach(timedOut)
+      else if (enumerateAll) {
+        // lazy: completions stream straight into the output — never
+        // materialized; the timeout mode stops at the hasNext probe
+        val all = enumFromAnchor(evs, isteps, a, deadline, hasCtx)
+        if (!all.hasNext) {
+          if (mode == ScanMode.Timeouts)
+            timedOut(timeoutPartial(key, evs, isteps, a, deadline, hasCtx))
+        } else if (mode == ScanMode.Matches) all.foreach(matched)
+      } else {
+        // committed scan: ONE match per offered anchor — the earliest
+        // completion (the reference emits it first; its prune then
+        // discards the anchor's sibling branches, all sharing the
+        // start event). Loop-first patterns take the first enumerated
+        // completion.
+        val res =
+          if (strict)
+            strictFrom(evs, isteps, strictPrev(a), deadline, a.idx,
+              Vector.empty)
+          else if (hasLoopFirst(isteps))
+            enumFromAnchor(evs, isteps, a, deadline, hasCtx).nextOption()
+          else matchFrom(evs, isteps.drop(1), a, deadline, a.idx,
+            Vector(Vector(a)), hasCtx, tMin = true).map(Vector(Vector(a)) ++ _)
+        res match {
           case Some(bindings) =>
-            out += bindings
-            // under SkipToNextRow no mark is needed: a mature anchor is
-            // evicted in the same invocation (maturity bound == eviction
-            // bound), so each is offered exactly once across invocations
+            matched(bindings)
             afterMatch match {
               case SkipPastLastEvent =>
-                val lastEv = bindings.flatten.maxBy(e => (e.ts, e.id))
-                mark = Some(Mark(lastEv.ts, lastEv.id, inclusive = false))
+                skipTo(bindings.flatten.maxBy(_.idx), inclusive = false)
               case SkipToFirst(v, thr) =>
                 skipTarget(isteps, bindings, v, first = true, a, thr)
-                  .foreach(advanceTo)
+                  .foreach(skipTo(_, inclusive = true))
               case SkipToLast(v, thr) =>
                 skipTarget(isteps, bindings, v, first = false, a, thr)
-                  .foreach(advanceTo)
+                  .foreach(skipTo(_, inclusive = true))
               case _ =>
             }
-          case None if collectTimeouts =>
+          case None if mode == ScanMode.Timeouts =>
             if (strict)
-              strictTimeoutPartial(key, seq, isteps, a, deadline)
-                .foreach(tmos += _)
-            else
-              tmos += timeoutPartial(key, seq, isteps, a, deadline, hasCtx)
+              strictTimeoutPartial(key, evs, isteps, a, deadline)
+                .foreach(timedOut)
+            else timedOut(timeoutPartial(key, evs, isteps, a, deadline, hasCtx))
           case None =>
-          }
         }
       }
     }
-    (out.result(), tmos.result(), mark)
+  }
+
+  /** The streaming runner ([[graft.streaming.StreamingMatchRecognize]]):
+    * one [[AnchorScan]] over a key's buffered (tsMicros, id, satMask,
+    * nav, navS) events, offering only anchors whose window the
+    * watermark has closed (anchor.ts + within <= watermark: no event
+    * the window could bind can still arrive), so every emission is
+    * exactly what the batch scan emits over the complete input. `mark`
+    * is the skip point carried in state, translated to a start index
+    * on the way in and returned as a [[Mark]] again. The buffer is
+    * already WITHIN-bounded by the operator's eviction, so a plain
+    * indexed view suffices. */
+  private[graft] def scanMature[O](
+      key: Long, buffered: Seq[(Long, Long, Long, Array[Double], Array[String])],
+      steps: Seq[Step], varNames: Seq[String], withinMicros: Long,
+      afterMatch: AfterMatch, wmMicros: Long, mark: Option[Mark],
+      ctx: Map[String, Seq[CtxCmp]] = Map.empty, strict: Boolean = false,
+      mode: ScanMode = ScanMode.Matches)(
+      onMatch: (Long, Matched, Long) => Seq[O] = noRows,
+      onTimeout: (Long, PTimeout, Long) => Seq[O] = noRows)
+      : (Seq[O], Option[Mark]) = {
+    val scan = new AnchorScan(compile(steps, varNames.zipWithIndex.toMap, ctx),
+      withinMicros, afterMatch, strict, mode, onMatch, onTimeout)
+    val evs = buffered.toVector.sortBy(t => (t._1, t._2))
+      .zipWithIndex.map { case ((ts, id, s, nv, ns), i) =>
+        Ev(ts, id, s, i, nv, ns) }
+    mark.foreach { m =>
+      val at = evs.indexWhere(e => e.ts > m.ts ||
+        (e.ts == m.ts && (e.id > m.id || (m.inclusive && e.id == m.id))))
+      scan.minAnchorIdx = if (at < 0) evs.size else at
+      scan.mark = mark
+    }
+    val seq = new VecEvs(evs)
+    val out = Vector.newBuilder[O]
+    evs.iterator.takeWhile(_.ts + withinMicros <= wmMicros)
+      .foreach(a => if (scan.startable(a)) scan.offer(key, seq, a, out))
+    (out.result(), scan.mark)
   }
 
   /** Resolve the AFTER MATCH SKIP TO FIRST/LAST target event
@@ -1800,121 +1793,39 @@ object PatternNFA {
     ds.repartition(col("key"))
       .sortWithinPartitions(col("key"), col("tsMicros"), col("id"))
 
-  /** The shared batch scan, streaming over a (key, ts, id)-sorted
+  /** The batch runner's iterator, streaming over a (key, ts, id)-sorted
     * partition with a WITHIN-bounded sliding buffer per key — the
     * whole-key materialization the r8 judge flagged is gone:
     *
-    *  - an anchor is offered (FIFO, deadlines are monotone in anchor
-    *    order) exactly when its window is provably complete — the
-    *    first event with ts beyond its deadline arrived, or the key
+    *  - an anchor is offered to `scan` (FIFO, deadlines are monotone in
+    *    anchor order) exactly when its window is provably complete —
+    *    the first event with ts beyond its deadline arrived, or the key
     *    ended. Every scan access is then confined to
     *    [anchor.idx, first-event-past-deadline], all buffered.
     *  - events below the oldest pending anchor are evicted as anchors
     *    drain, so the buffer holds at most one `within` of events —
-    *    the same bound as the streaming operator's keyed state
-    *    ([[matchesMature]]'s eviction). A hot key of any length costs
-    *    one window of memory.
-    *  - matches, skip-mark advancement, match numbering, and timeout
-    *    partials all run inside this one loop, so the main and timeout
-    *    outputs see identical offered anchors under EVERY AfterMatch
-    *    strategy by construction.
+    *    the same bound as the streaming operator's keyed state. A hot
+    *    key of any length costs one window of memory.
     *
-    * `onMatch`/`onTimeout` shape the emitted rows; outputs queue only
-    * until the consumer drains them (the returned iterator is lazy). */
+    * Outputs queue only until the consumer drains them (the returned
+    * iterator is lazy). */
   private def scanSortedPartition[O](
       rows: Iterator[(Long, Long, Long, Long, Array[Double], Array[String])],
-      isteps: Seq[INode], withinMicros: Long, afterMatch: AfterMatch,
-      collectTimeouts: Boolean,
-      gauge: Option[org.apache.spark.util.LongAccumulator],
-      wantMatches: Boolean = true, strict: Boolean = false,
-      branchTimeoutMode: Boolean = false)(
-      onMatch: (Long, Vector[Vector[Ev]], Long) => Seq[O],
-      onTimeout: (Long, PTimeout, Long) => Seq[O]): Iterator[O] = new Iterator[O] {
-
-    private val hasCtx = anyCtx(isteps)
-    private val enumerateAll = afterMatch == NoSkip
-    require(!(strict && enumerateAll),
-      "strict row-pattern mode has no NoSkip/followedByAny form " +
-        "(no MATCH_RECOGNIZE clause produces them)")
-    require(strict || !(hasLoopFirst(isteps) && collectTimeouts),
-      "timeout side outputs do not support loop-first patterns")
-    if (!strict) checkZeroLoopFirst(isteps)
-    private val startMask = if (strict) strictStartMask(isteps) else 0L
+      scan: AnchorScan[O], gauge: Option[org.apache.spark.util.LongAccumulator])
+      : Iterator[O] = new Iterator[O] {
     private val buf = new SlidingEvs
     private val pending = scala.collection.mutable.Queue.empty[Ev]
     private val out = scala.collection.mutable.Queue.empty[O]
     private var curKey = 0L
     private var haveKey = false
     private var nextIdx = 0
-    private var minAnchorIdx = 0
-    private var matchNo = 0L
 
-    private def scanAnchor(a: Ev): Unit = {
-      if (a.idx < minAnchorIdx) return
-      val deadline = a.ts + withinMicros
-      if (branchTimeoutMode) {
-        // per-branch expiry emission: match status never suppresses
-        // (the reference expires an anchor's stays even when it also
-        // fully matched), and NoSkip means no skip-mark bookkeeping
-        branchTimeouts(curKey, buf, isteps, a, deadline)
-          .foreach(t => out ++= onTimeout(curKey, t, deadline))
-        return
-      }
-      if (enumerateAll) {
-        val all = enumFromAnchor(buf, isteps, a, deadline, hasCtx)
-        if (!all.hasNext) {
-          if (collectTimeouts)
-            out ++= onTimeout(curKey,
-              timeoutPartial(curKey, buf, isteps, a, deadline, hasCtx),
-              deadline)
-        } else if (wantMatches) all.foreach { bindings =>
-          // lazy: completions stream straight into the output queue —
-          // never materialized; a matches-discarding caller
-          // (runTimeouts) stops at the hasNext probe above
-          matchNo += 1
-          out ++= onMatch(curKey, bindings, matchNo)
-        }
-      } else {
-        // committed scan: ONE match per offered anchor — the earliest
-        // completion (the reference emits it first; its prune then
-        // discards the anchor's sibling branches, all sharing the
-        // start event). Loop-first patterns take the first enumerated
-        // completion.
-        val res =
-          if (strict)
-            strictFrom(buf, isteps, strictPrev(a), deadline, a.idx,
-              Vector.empty)
-          else if (hasLoopFirst(isteps))
-            enumFromAnchor(buf, isteps, a, deadline, hasCtx).nextOption()
-          else matchFrom(buf, isteps.drop(1), a, deadline, a.idx,
-            Vector(Vector(a)), hasCtx, tMin = true).map(Vector(Vector(a)) ++ _)
-        res match {
-          case Some(bindings) =>
-            matchNo += 1
-            out ++= onMatch(curKey, bindings, matchNo)
-            afterMatch match {
-              case SkipPastLastEvent =>
-                minAnchorIdx = bindings.flatten.map(_.idx).max + 1
-              case SkipToFirst(v, thr) =>
-                skipTarget(isteps, bindings, v, first = true, a, thr)
-                  .foreach(t => minAnchorIdx = math.max(minAnchorIdx, t.idx))
-              case SkipToLast(v, thr) =>
-                skipTarget(isteps, bindings, v, first = false, a, thr)
-                  .foreach(t => minAnchorIdx = math.max(minAnchorIdx, t.idx))
-              case _ =>
-            }
-            // anchors the skip strategy passed over can never scan —
-            // dropping them eagerly is what lets the buffer evict
-            while (pending.nonEmpty && pending.head.idx < minAnchorIdx)
-              pending.dequeue()
-          case None if collectTimeouts =>
-            val tmo =
-              if (strict) strictTimeoutPartial(curKey, buf, isteps, a, deadline)
-              else Some(timeoutPartial(curKey, buf, isteps, a, deadline, hasCtx))
-            tmo.foreach(t => out ++= onTimeout(curKey, t, deadline))
-          case None =>
-        }
-      }
+    private def offer(a: Ev): Unit = {
+      scan.offer(curKey, buf, a, out)
+      // anchors the skip strategy passed over can never scan —
+      // dropping them eagerly is what lets the buffer evict
+      while (pending.nonEmpty && pending.head.idx < scan.minAnchorIdx)
+        pending.dequeue()
     }
 
     /** Scan every pending anchor whose window closed strictly before
@@ -1925,10 +1836,10 @@ object PatternNFA {
       * `< uptoTs` is merely one event conservative), evicting behind
       * the oldest still-pending anchor as they drain. The just-appended
       * trigger event (nextIdx - 1) is always retained — its own
-      * anchorOk check hasn't run yet. */
+      * startable check hasn't run yet. */
     private def drainMature(uptoTs: Long): Unit = {
-      while (pending.nonEmpty && pending.head.ts + withinMicros < uptoTs) {
-        scanAnchor(pending.dequeue())
+      while (pending.nonEmpty && pending.head.ts + scan.withinMicros < uptoTs) {
+        offer(pending.dequeue())
         buf.evictBelow(
           if (pending.isEmpty) nextIdx - 1 else pending.head.idx)
       }
@@ -1936,12 +1847,12 @@ object PatternNFA {
 
     private def flushKey(): Unit = {
       while (pending.nonEmpty) {
-        scanAnchor(pending.dequeue())
+        offer(pending.dequeue())
         buf.evictBelow(
           if (pending.isEmpty) nextIdx else pending.head.idx)
       }
       gauge.foreach(_.add(buf.maxHeld.toLong))
-      buf.reset(); nextIdx = 0; minAnchorIdx = 0; matchNo = 0L
+      buf.reset(); nextIdx = 0; scan.reset()
     }
 
     private def feed(row: (Long, Long, Long, Long, Array[Double], Array[String])): Unit = {
@@ -1954,12 +1865,8 @@ object PatternNFA {
       nextIdx += 1
       buf.append(e) // append FIRST: NotNext peeks one past the deadline
       drainMature(ts)
-      // a skip strategy that already advanced past e can never offer
-      // it; strict attempts start at any row the start mask admits
-      // (the attempt itself re-checks context predicates)
-      val startable =
-        if (strict) (e.sat & startMask) != 0 else anchorOk(e, isteps)
-      if (startable && e.idx >= minAnchorIdx) pending.enqueue(e)
+      // a skip strategy that already advanced past e can never offer it
+      if (scan.startable(e) && e.idx >= scan.minAnchorIdx) pending.enqueue(e)
       else if (pending.isEmpty) buf.evictBelow(nextIdx) // nothing reads e
     }
 

@@ -2122,8 +2122,8 @@ object Streaming extends QueryGroup {
     },
 
     // STREAMING per-branch timeouts over a LOOP interior (r13 — the
-    // streaming twin of cep26; shares PatternNFA.branchTimeouts via
-    // matureTimeoutBranches, so the live-branch set is the batch
+    // streaming twin of cep26; runs the batch doors' per-anchor scan
+    // (PatternNFA.scanMature), so the live-branch set is the batch
     // contract cut at anchor maturity: a_us + within <= watermark).
     // Oracle: cep26's closed form (bare anchor iff no in-window
     // click; prefix k < K iff no purchase after c_k; full run always)

@@ -9,23 +9,28 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the reference's StreamExecMatch.scala:68 runs its NFA per key on an
   * unbounded stream; this is the Spark analog over
   * `flatMapGroupsWithState`). The batch facade compiles the clause;
-  * this operator runs the SAME NFA incrementally:
+  * this operator runs the SAME per-anchor scan as the batch doors
+  * ([[PatternNFA.scanMature]]), with a different completeness signal:
   *
   *  - DEFINE predicates are pre-evaluated map-side into a bitmask
   *    column (identical to the batch path) so keyed state buffers only
-  *    (tsMicros, id, satMask) triples — no strings, no event payloads.
-  *  - A match is emitted exactly when its anchor MATURES: anchor.ts +
-  *    within <= watermark, i.e. every event its window could bind is
-  *    final. Emitted matches therefore equal the batch scan over the
-  *    complete input, independent of how events were batched.
+  *    (tsMicros, id, satMask, nav) rows — no event payloads.
+  *  - Batch offers an anchor once a later event has passed its
+  *    deadline or the key has ended; this operator offers it once the
+  *    watermark has: anchor.ts + within <= watermark, when every event
+  *    its window could bind is final. Emitted rows therefore equal the
+  *    batch scan over the complete input, independent of how events
+  *    were batched.
   *  - State is bounded by the window: an event is evicted at the same
   *    bound that matures it as an anchor (ts + within <= watermark),
   *    so each anchor is offered exactly once, and per-key state holds
   *    at most one `within` of events. An event-time timer fires at the
   *    earliest buffered event's deadline so quiet keys still flush and
   *    release state (idle-state hygiene).
-  *  - AFTER MATCH SKIP PAST LAST ROW carries its high-water mark in
-  *    state across micro-batches.
+  *  - The skip point of SKIP PAST LAST ROW / SKIP TO FIRST|LAST rides
+  *    in state across micro-batches as a (ts, id) [[PatternNFA.Mark]];
+  *    the scan turns it into a start index on the way in and back into
+  *    a mark on the way out.
   *
   * MEASURES on streams (the reference supports exactly this: streaming
   * MATCH_RECOGNIZE with MEASURES, ONE ROW PER MATCH only): see
@@ -57,45 +62,42 @@ object StreamingMatchRecognize {
                           values: Seq[Option[Double]],
                           classifier: String = null)
 
-  /** Per-key fire context: the compiled pattern the scan needs. */
-  private final case class ScanCtx(steps: Seq[PatternNFA.Step],
-                                   varNames: Seq[String],
-                                   withinMicros: Long,
-                                   afterMatch: PatternNFA.AfterMatch,
-                                   ctx: Map[String, Seq[PatternNFA.CtxCmp]])
-
-  /** SHARED state plumbing for the match stream and the timeout side
-    * output — compile, bitmask projection, watermark column, buffer
-    * fold, eviction (== maturity) bound, flush-on-silence timer. The
-    * two outputs differ ONLY in the per-key scan (`fire`), so the
-    * batching-invariance contract (same offered anchors, same
-    * eviction) holds by construction instead of by keeping two copies
-    * in sync. */
+  /** The clause door: compiles the MATCH_RECOGNIZE clause onto the
+    * strict row-pattern scan and runs it through [[runKeyedSteps]]. */
   private def runKeyed[T: org.apache.spark.sql.Encoder](
       spark: SparkSession, events: DataFrame, clause: String,
-      watermarkDelay: String, requireMsg: String)(
-      fire: (ScanCtx, Long, List[(Long, Long, Long, Array[Double], Array[String])], Long,
-             Option[PatternNFA.Mark]) => (Seq[T], Option[PatternNFA.Mark]))
+      watermarkDelay: String, requireMsg: String, mode: PatternNFA.ScanMode)(
+      onMatch: (Long, PatternNFA.Matched, Long) => Seq[T] = PatternNFA.noRows,
+      onTimeout: (Long, PatternNFA.PTimeout, Long) => Seq[T] = PatternNFA.noRows)
       : Dataset[T] = {
     val c = MatchRecognize.compile(clause)
     require(c.measures.isEmpty, requireMsg)
     runKeyedSteps(spark, events, c.steps,
       c.defines.map { case (n, body) => n -> expr(body) },
-      c.withinMicros, c.afterMatch, c.navCols, c.ctx, watermarkDelay)(fire)
+      c.withinMicros, c.afterMatch, c.navCols, c.ctx, watermarkDelay,
+      strict = true, mode)(onMatch, onTimeout)
   }
 
-  /** The API-pattern door (the reference's `CEP.pattern(stream, …)` —
-    * PatternStream.java: the CEP library IS stream-first): the same
-    * keyed-state plumbing the clause door compiles onto, but fed the
+  /** SHARED state plumbing for every door but [[measures]] — bitmask
+    * projection, watermark column, buffer fold, eviction (== maturity)
+    * bound, flush-on-silence timer — around one
+    * [[PatternNFA.scanMature]] call per key and trigger. The doors
+    * differ only in the scan mode and the (onMatch, onTimeout)
+    * emitters, exactly like the batch doors, so the matches and both
+    * timeout outputs see the same offered anchors by construction.
+    * The API-pattern doors (the reference's `CEP.pattern(stream, …)` —
+    * PatternStream.java: the CEP library IS stream-first) feed the
     * Pattern-algebra steps directly — the only route to streaming
     * GROUP patterns and NO SKIP, which have no SQL clause form. */
   private def runKeyedSteps[T: org.apache.spark.sql.Encoder](
       spark: SparkSession, events: DataFrame, steps: Seq[PatternNFA.Step],
       preds: Seq[(String, org.apache.spark.sql.Column)], withinMicros: Long,
       afterMatch: PatternNFA.AfterMatch, navCols: Seq[String],
-      defCtx: Map[String, Seq[PatternNFA.CtxCmp]], watermarkDelay: String)(
-      fire: (ScanCtx, Long, List[(Long, Long, Long, Array[Double], Array[String])], Long,
-             Option[PatternNFA.Mark]) => (Seq[T], Option[PatternNFA.Mark]))
+      defCtx: Map[String, Seq[PatternNFA.CtxCmp]], watermarkDelay: String,
+      strict: Boolean = false,
+      mode: PatternNFA.ScanMode = PatternNFA.ScanMode.Matches)(
+      onMatch: (Long, PatternNFA.Matched, Long) => Seq[T] = PatternNFA.noRows,
+      onTimeout: (Long, PatternNFA.PTimeout, Long) => Seq[T] = PatternNFA.noRows)
       : Dataset[T] = {
     import spark.implicits._
     require(preds.size <= 64, "at most 64 pattern variables")
@@ -107,8 +109,7 @@ object StreamingMatchRecognize {
     // RCmp trees
     val (navCol, navSCol) = PatternNFA.navProjections(navCols,
       PatternNFA.navStringFlags(events, navCols))
-    val ctx = ScanCtx(steps, preds.map(_._1), withinMicros, afterMatch,
-      defCtx)
+    val varNames = preds.map(_._1)
     val within = withinMicros
 
     // the watermark column must survive the projection — event-time
@@ -133,7 +134,9 @@ object StreamingMatchRecognize {
         val wm = state.getCurrentWatermarkMs() * 1000L
         val mark0 = if (cur.hasMark)
           Some(PatternNFA.Mark(cur.markTs, cur.markId, cur.markIncl)) else None
-        val (emitted, mark) = fire(ctx, key, buffered, wm, mark0)
+        val (emitted, mark) = PatternNFA.scanMature(key, buffered, steps,
+          varNames, within, afterMatch, wm, mark0, defCtx, strict, mode)(
+          onMatch, onTimeout)
         // eviction bound == maturity bound: kept events are exactly the
         // not-yet-mature suffix of the buffer
         val kept = buffered.filter { case (ts, _, _, _, _) => ts + within > wm }
@@ -160,11 +163,8 @@ object StreamingMatchRecognize {
             watermarkDelay: String = "10 minutes"): Dataset[PatternNFA.PMatch] = {
     import spark.implicits._
     runKeyed[PatternNFA.PMatch](spark, events, clause, watermarkDelay,
-      "MEASURES is batch-only (the reference restricts streaming MATCH_RECOGNIZE too)") {
-      (c, key, buffered, wm, mark0) =>
-        PatternNFA.matchesMature(key, buffered, c.steps, c.varNames,
-          c.withinMicros, c.afterMatch, wm, mark0, c.ctx, strict = true)
-    }
+      "MEASURES is batch-only (the reference restricts streaming MATCH_RECOGNIZE too)",
+      PatternNFA.ScanMode.Matches)(onMatch = (key, m, _) => Seq(m.row(key)))
   }
 
   /** Streaming CEP via the PATTERN API (the reference's
@@ -178,23 +178,9 @@ object StreamingMatchRecognize {
               watermarkDelay: String = "10 minutes")
       : Dataset[PatternNFA.PMatch] = {
     import spark.implicits._
-    def kindsOf(ss: Seq[PatternNFA.Step]): Seq[String] = ss.flatMap { st =>
-      st.quant match {
-        case g: PatternNFA.GroupTimes =>
-          kindsOf(g.sub) ++ g.untilKind.toSeq
-        case PatternNFA.OneOrMore(Some(uk), _, _) => Seq(st.kind, uk)
-        case PatternNFA.ZeroOrMore(Some(uk), _, _) => Seq(st.kind, uk)
-        case _ => Seq(st.kind)
-      }
-    }
-    val preds = kindsOf(steps).distinct.filter(_.nonEmpty)
-      .map(k => k -> (col("kind") === lit(k)))
-    runKeyedSteps[PatternNFA.PMatch](spark, events, steps, preds,
-      withinMicros, afterMatch, Nil, Map.empty, watermarkDelay) {
-      (c, key, buffered, wm, mark0) =>
-        PatternNFA.matchesMature(key, buffered, c.steps, c.varNames,
-          c.withinMicros, c.afterMatch, wm, mark0, c.ctx)
-    }
+    runKeyedSteps[PatternNFA.PMatch](spark, events, steps,
+      PatternNFA.kindPreds(steps), withinMicros, afterMatch, Nil, Map.empty,
+      watermarkDelay)(onMatch = (key, m, _) => Seq(m.row(key)))
   }
 
   /** Timed-out partial matches on the unbounded stream — the
@@ -211,11 +197,8 @@ object StreamingMatchRecognize {
       : Dataset[PatternNFA.PTimeout] = {
     import spark.implicits._
     runKeyed[PatternNFA.PTimeout](spark, events, clause, watermarkDelay,
-      "timeout side output carries bindings, not MEASURES") {
-      (c, key, buffered, wm, mark0) =>
-        PatternNFA.matureTimeouts(key, buffered, c.steps, c.varNames,
-          c.withinMicros, c.afterMatch, wm, mark0, c.ctx, strict = true)
-    }
+      "timeout side output carries bindings, not MEASURES",
+      PatternNFA.ScanMode.Timeouts)(onTimeout = (_, t, _) => Seq(t))
   }
 
   /** Streaming PER-BRANCH timeout side output (r12; the PATTERN-API
@@ -230,23 +213,15 @@ object StreamingMatchRecognize {
                       watermarkDelay: String = "10 minutes")
       : Dataset[PatternNFA.PTimeoutB] = {
     import spark.implicits._
-    require(steps.length >= 2,
-      "timeoutBranches needs at least two steps (a single-step " +
-        "pattern completes on its anchor — nothing can time out); " +
-        "mirrors PatternNFA.runTimeoutBranches")
-    // fail fast at construction on unsupported quantifiers
-    // (until-loops, groups) instead of inside executor tasks on the
-    // first micro-batch (r13 advisor); loop-first patterns stay
-    // rejected by the shared scan guards
+    // fail fast at construction on a single-step pattern and on
+    // unsupported quantifiers (until-loops, groups) instead of inside
+    // executor tasks on the first micro-batch; loop-first patterns
+    // stay rejected by the shared scan guards
     PatternNFA.validateBranchShapes(steps)
-    val preds = steps.map(_.kind).distinct.filter(_.nonEmpty)
-      .map(k => k -> (col("kind") === lit(k)))
-    runKeyedSteps[PatternNFA.PTimeoutB](spark, events, steps, preds,
-      withinMicros, PatternNFA.NoSkip, Nil, Map.empty, watermarkDelay) {
-      (c, key, buffered, wm, mark0) =>
-        (PatternNFA.matureTimeoutBranches(key, buffered, c.steps,
-          c.varNames, c.withinMicros, wm), mark0)
-    }
+    runKeyedSteps[PatternNFA.PTimeoutB](spark, events, steps,
+      PatternNFA.kindPreds(steps), withinMicros, PatternNFA.NoSkip, Nil,
+      Map.empty, watermarkDelay, mode = PatternNFA.ScanMode.Branches)(
+      onTimeout = PatternNFA.branchRow)
   }
 
   /** Streaming MATCH_RECOGNIZE WITH MEASURES (ONE ROW PER MATCH) —
@@ -375,9 +350,9 @@ object StreamingMatchRecognize {
           (ts, id, sat, nav, navS) }
         val mvalsOf = buffered.map { case (ts, id, _, mv, _, _) =>
           (ts, id) -> mv }.toMap
-        val (rawMatches, mark) = PatternNFA.matureBindingsRaw(
-          quads, steps, varNames, within, afterMatch, wm, mark0, defCtx,
-          strict = true)
+        val (rawMatches, mark) = PatternNFA.scanMature(key, quads, steps,
+          varNames, within, afterMatch, wm, mark0, defCtx, strict = true)(
+          onMatch = (_, m, _) => Seq(m.pairs))
         var seq = cur.matchSeq
         def fold(m: MatchRecognize.Measure,
                  bindings: Seq[Seq[(Long, Long)]]): Option[Double] = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftExtensions, SparkEntry, Tables}
+import graft.{GraftExtensions, GraftSession, Tables}
 import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for selected queries to files — the
@@ -30,12 +30,7 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
-    val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.trim.nonEmpty)
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
-    }
+    val selected = GraftSession.selected(ifUnset = Map.empty)
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{GraftExtensions, SparkEntry}
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Measurement aid (guide §1): time selected queries solo with the
@@ -16,18 +15,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors, 32).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // per-trigger progress capture
     val batches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -63,16 +51,7 @@ object Prof {
 
     SparkEntry.entry(spark).count() // warmup, as in Bench
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.trim.nonEmpty)
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    def releaseCaches(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    val selected = GraftSession.selected()
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROF_RUNS", "2").toInt
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val times = (1 to runs).map { i =>
@@ -81,7 +60,7 @@ object Prof {
         try fn(spark, sfDir).count()
         catch { case e: Throwable => println(s"[prof] $name FAILED: $e") }
         val dt = (System.nanoTime() - t0) / 1e9
-        releaseCaches()
+        GraftSession.releaseCaches(spark)
         println(f"[prof] $name run$i%d = $dt%.3f s")
         if (!batches.isEmpty) {
           println(s"[prof] $name run$i micro-batches:")
