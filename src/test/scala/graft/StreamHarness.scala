@@ -1,7 +1,7 @@
 package graft
 
 import graft.streaming.GEvent
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -49,6 +49,33 @@ object StreamHarness {
       q.processAllAvailable()
     } finally q.stop()
     spark.table(name)
+  }
+
+  /** [[run]] in Append mode with a stop and a restart between batches:
+    * each batch runs in a query of its own, started from one shared
+    * checkpoint directory, so every batch after the first restores the
+    * operator's state and the watermark from that checkpoint. Rows are
+    * collected per batch id through foreachBatch (the memory sink
+    * cannot resume in Append mode), so a batch that a restart replays
+    * replaces the rows of its first run. */
+  def runRestarting(batches: Seq[Seq[GEvent]])
+                   (build: Dataset[GEvent] => DataFrame): Seq[Row] = {
+    val input = mkStream()
+    val out = build(input.toDS())
+    val dir = java.nio.file.Files.createTempDirectory("graft_restart")
+    val byBatch = scala.collection.concurrent.TrieMap.empty[Long, Array[Row]]
+    val sink: (DataFrame, Long) => Unit = (b, id) => byBatch(id) = b.collect()
+    try batches.zipWithIndex.foreach { case (b, i) =>
+      val q = out.writeStream.outputMode(OutputMode.Append)
+        .option("checkpointLocation", dir.toString).foreachBatch(sink).start()
+      try {
+        input.addData(b)
+        q.processAllAvailable()
+        // as in run: an extra pass lets the last no-data batch fire timers
+        if (i == batches.size - 1) q.processAllAvailable()
+      } finally q.stop()
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    byBatch.toSeq.sortBy(_._1).flatMap(_._2)
   }
 
   /** Number of Spark jobs `body` starts on the shared session, counted

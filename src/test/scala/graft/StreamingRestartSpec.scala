@@ -1,0 +1,99 @@
+package graft
+
+import graft.streaming._
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.OutputMode
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Batching and restart invariance of the event-time operators that
+  * release a key's rows in watermark order: the same input fed as one
+  * micro-batch, as micro-batches of three events, and as micro-batches
+  * of three with the query stopped and restarted from its checkpoint
+  * between batches must emit the same rows. Inputs are small seeded
+  * keyed sequences with tied timestamps and ids not in arrival order,
+  * arriving out of event-time order by less than the watermark delay
+  * (so no event is late), and closed by a flush event far past every
+  * other event.
+  */
+class StreamingRestartSpec extends AnyFunSuite {
+  import StreamHarness.spark
+  import spark.implicits._
+
+  private val delaySec = 5L
+  private val delay = s"$delaySec seconds"
+  private val flush = GEvent(99L, 1000L * 1000000L, 0L, "L", 0.0)
+
+  /** One key: 3-8 events 0-3 s apart (0 = a tied timestamp) from
+    * t = 1 s: the first micro-batch runs at watermark 0, at or below
+    * which an event is late and dropped. Each event is paired with its
+    * arrival time, its event time plus a jitter below the delay. */
+  private def keyGen(key: Long): Gen[Seq[(GEvent, Long)]] = for {
+    n <- Gen.choose(3, 8)
+    gaps <- Gen.listOfN(n, Gen.choose(0L, 3L))
+    kinds <- Gen.listOfN(n, Gen.frequency(4 -> "L", 3 -> "R", 1 -> "on", 1 -> "off"))
+    noise <- Gen.listOfN(n, Gen.choose(0L, 99L))
+    cents <- Gen.listOfN(n, Gen.choose(-500L, 5000L))
+    jitter <- Gen.listOfN(n, Gen.choose(0L, delaySec - 1))
+  } yield {
+    val ts = gaps.scanLeft(1L)(_ + _).tail
+    ts.indices.map(i => GEvent(key, ts(i) * 1000000L,
+      key * 10000L + noise(i) * 10L + i, kinds(i), cents(i) / 100.0) ->
+      (ts(i) + jitter(i)))
+  }
+
+  /** Four keys of seeded events in arrival order, then the flush. An
+    * event arrives after another only if its event time is less than
+    * the delay behind it, so it is never below the watermark. */
+  private val events: Seq[GEvent] =
+    (1L to 4L).flatMap(k =>
+      keyGen(k).pureApply(Gen.Parameters.default, Seed(9100L + k)))
+      .sortBy { case (e, arrival) => (arrival, e.id) }.map(_._1) :+ flush
+
+  private def side(ds: Dataset[GEvent], kind: String): Dataset[GEvent] =
+    ds.filter(col("kind") === kind)
+
+  private val operators: Seq[(String, Dataset[GEvent] => DataFrame)] = Seq(
+    "over" -> (ds => StreamingOverAgg(spark, ds, kPreceding = 2, delay).toDF()),
+    "unbounded_over" -> (ds => StreamingUnboundedOverAgg(spark, ds, delay).toDF()),
+    "range_over" -> (ds =>
+      StreamingRangeOverAgg(spark, ds, rangeMicros = 3000000L, delay).toDF()),
+    "temporal_sort" -> (ds => StreamingTemporalSort(spark, ds, delay).toDF()),
+    "connect" -> (ds => StreamingConnect(spark, ds, "on", "off", delay).toDF()),
+    "semi_anti" -> (ds =>
+      StreamingSemiAntiJoin(spark, side(ds, "L"), side(ds, "R"), delay).toDF()),
+    "asof" -> (ds =>
+      StreamingAsOfJoin(spark, side(ds, "L"), side(ds, "R"), delay).toDF()))
+
+  private def sorted(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
+
+  test("the seeded input has out-of-order arrivals, tied timestamps and no late event") {
+    val keyed = events.init
+    assert(keyed.zip(keyed.tail).exists { case (a, b) => b.tsMicros < a.tsMicros })
+    assert(keyed.groupBy(e => (e.key, e.tsMicros)).exists(_._2.size > 1))
+    assert(keyed.groupBy(_.key).values.forall(_.size >= 3))
+    // a batch's watermark trails the largest earlier event time by the delay
+    keyed.indices.foreach { i =>
+      val seen = keyed.take(i).map(_.tsMicros).maxOption.getOrElse(0L)
+      assert(keyed(i).tsMicros > seen - delaySec * 1000000L, keyed(i))
+    }
+  }
+
+  operators.foreach { case (name, build) =>
+    test(s"$name emits the same rows in one batch, in batches of three and across restarts") {
+      val whole = sorted(StreamHarness.run(Seq(events), OutputMode.Append,
+        s"restart_${name}_whole")(build).collect().toSeq)
+      assert(whole.nonEmpty, s"$name emits nothing for the seeded input")
+      val thirds = events.grouped(3).toSeq
+      val chunked = sorted(StreamHarness.run(thirds, OutputMode.Append,
+        s"restart_${name}_chunked")(build).collect().toSeq)
+      assert(chunked == whole,
+        s"$name, batches of three:\nchunked=$chunked\nwhole=$whole\nevents=$events")
+      val restarted = sorted(StreamHarness.runRestarting(thirds)(build))
+      assert(restarted == whole,
+        s"$name, restarts:\nrestarted=$restarted\nwhole=$whole\nevents=$events")
+    }
+  }
+}
