@@ -918,10 +918,7 @@ object PatternNFA {
       "first step must be quantifier One (anchor), a loop, or a " +
         "group (loop/group-first anchoring)")
     require(varPreds.size <= 64, "at most 64 pattern variables")
-    val bitOf = varPreds.map(_._1).zipWithIndex.toMap
-    val isteps = compile(steps, k => bitOf.getOrElse(k,
-      sys.error(s"step references undefined pattern variable $k")), ctx,
-      untilCtx)
+    val isteps = compileSteps(steps, varPreds.map(_._1), ctx, untilCtx).isteps
     val satCol = varPreds.zipWithIndex.map { case ((_, p), i) =>
       when(p, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
@@ -1714,6 +1711,24 @@ object PatternNFA {
     }
   }
 
+  /** Steps compiled once, on the driver: pattern variable `i` of
+    * `varNames` is bit `i` of the satisfaction mask. The streaming
+    * doors compile at construction, so an invalid pattern (an unknown
+    * variable, a DEFINE forward reference) fails when the query is
+    * built, as in batch, and [[scanMature]] reuses the compiled nodes
+    * on every trigger. */
+  private[graft] final class Compiled private[PatternNFA] (
+      private[PatternNFA] val isteps: Seq[INode]) extends Serializable
+
+  private[graft] def compileSteps(steps: Seq[Step], varNames: Seq[String],
+                                  ctx: Map[String, Seq[CtxCmp]] = Map.empty,
+                                  untilCtx: Map[String, Seq[CtxCmp]] = Map.empty)
+      : Compiled = {
+    val bitOf = varNames.zipWithIndex.toMap
+    new Compiled(compile(steps, v => bitOf.getOrElse(v,
+      sys.error(s"step references undefined pattern variable $v")), ctx, untilCtx))
+  }
+
   /** The streaming runner ([[graft.streaming.StreamingMatchRecognize]]):
     * one [[AnchorScan]] over a key's buffered (tsMicros, id, satMask,
     * nav, navS) events, offering only anchors whose window the
@@ -1726,14 +1741,13 @@ object PatternNFA {
     * indexed view suffices. */
   private[graft] def scanMature[O](
       key: Long, buffered: Seq[(Long, Long, Long, Array[Double], Array[String])],
-      steps: Seq[Step], varNames: Seq[String], withinMicros: Long,
+      pattern: Compiled, withinMicros: Long,
       afterMatch: AfterMatch, wmMicros: Long, mark: Option[Mark],
-      ctx: Map[String, Seq[CtxCmp]] = Map.empty, strict: Boolean = false,
-      mode: ScanMode = ScanMode.Matches)(
+      strict: Boolean = false, mode: ScanMode = ScanMode.Matches)(
       onMatch: (Long, Matched, Long) => Seq[O] = noRows,
       onTimeout: (Long, PTimeout, Long) => Seq[O] = noRows)
       : (Seq[O], Option[Mark]) = {
-    val scan = new AnchorScan(compile(steps, varNames.zipWithIndex.toMap, ctx),
+    val scan = new AnchorScan(pattern.isteps,
       withinMicros, afterMatch, strict, mode, onMatch, onTimeout)
     val evs = buffered.toVector.sortBy(t => (t._1, t._2))
       .zipWithIndex.map { case ((ts, id, s, nv, ns), i) =>

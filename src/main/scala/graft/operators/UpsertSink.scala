@@ -62,15 +62,14 @@ object UpsertSink {
           checkpointDir: Option[String] = None): Unit = {
     require(changelog.isStreaming, "UpsertSink.run takes a streaming changelog")
     require(keyCols.nonEmpty && seqCols.nonEmpty)
-    graft.streaming.LocalCheckpointFileManager.install(spark)
     val w0 = changelog.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyBatch(spark, batch, tablePath, keyCols, seqCols, flagCol,
           numBuckets)
         ()
       }
-    val q = checkpointDir.fold(w0)(d => w0.option("checkpointLocation", d))
-      .start()
+    val q = graft.streaming.StreamRunner.start(spark,
+      checkpointDir.fold(w0)(d => w0.option("checkpointLocation", d)))
     try q.processAllAvailable() finally q.stop()
   }
 

@@ -1965,10 +1965,9 @@ object Streaming extends QueryGroup {
         System.getProperty("java.io.tmpdir"),
         s"graft_st54_channel_${ProcessHandle.current().pid()}").toString
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dirc))
-      graft.streaming.LocalCheckpointFileManager.install(s)
-      val q1 = matches.writeStream.outputMode(OutputMode.Append)
+      val q1 = StreamRunner.start(s, matches.writeStream.outputMode(OutputMode.Append)
         .format("parquet").option("path", s"$dirc/matches")
-        .option("checkpointLocation", s"$dirc/chk").start()
+        .option("checkpointLocation", s"$dirc/chk"))
       try q1.processAllAvailable() finally q1.stop()
       // hop 2: streaming DAY window over the channel, its own watermark
       val agg = s.readStream.schema(matches.schema)

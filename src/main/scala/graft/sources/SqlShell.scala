@@ -182,13 +182,10 @@ object SqlShell {
 
     /** Started on construction; the caller pumps the source and calls
       * [[processAllAvailable]] / [[stop]] like any streaming query. */
-    val query: org.apache.spark.sql.streaming.StreamingQuery = {
-      graft.streaming.LocalCheckpointFileManager.install(df.sparkSession)
-      df.writeStream
+    val query: org.apache.spark.sql.streaming.StreamingQuery =
+      graft.streaming.StreamRunner.start(df.sparkSession, df.writeStream
         .outputMode(if (complete) "complete" else "update")
-        .foreachBatch(onBatch _)
-        .start()
-    }
+        .foreachBatch(onBatch _))
     def processAllAvailable(): Unit = query.processAllAvailable()
     def stop(): Unit = query.stop()
   }

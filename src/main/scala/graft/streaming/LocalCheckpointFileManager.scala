@@ -124,8 +124,8 @@ object LocalCheckpointFileManager {
   val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   /** Point the session's streaming checkpoints at this manager unless
-    * the deployment already chose one explicitly. Called by each drive
-    * helper right before `start()` — idempotent, never overrides. */
+    * the deployment already chose one explicitly. Called by
+    * [[StreamRunner.start]] — idempotent, never overrides. */
   def install(spark: org.apache.spark.sql.SparkSession): Unit =
     if (spark.conf.getOption(ConfKey).isEmpty)
       spark.conf.set(ConfKey, classOf[LocalCheckpointFileManager].getName)

@@ -11,38 +11,16 @@ case class SortEmit(key: Long, id: Long, tsMicros: Long, emitSeq: Long)
 
 /** Streaming temporal sort (SURVEY.md §2.6 —
   * operators/sort/RowTimeSortOperator.java:43 / StreamSortOperator
-  * .java:50): buffer out-of-order rows in keyed state and release them
-  * sorted by (event time, id) once the watermark passes their
-  * timestamp — watermark-ordered emission, state bounded by the
-  * watermark horizon.
+  * .java:50): out-of-order rows are buffered per key and released
+  * sorted by (event time, id) once the watermark passes them — the
+  * [[WatermarkFold]] itself, with the emitted count as accumulator.
   */
 object StreamingTemporalSort {
-  case class State(buf: List[(Long, Long)], emitted: Long)
-
   def apply(spark: SparkSession, ds: Dataset[GEvent],
-            watermarkDelay: String = "1 minute"): Dataset[SortEmit] = {
-    import spark.implicits._
-    val withTs = ds
-      .withColumn("ts", timestamp_micros(col("tsMicros")))
-      .withWatermark("ts", watermarkDelay)
-      .as[GEvent]
-    withTs.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        val cur = state.getOption.getOrElse(State(Nil, 0L))
-        var buf = cur.buf
-        rows.foreach(e => buf = (e.tsMicros, e.id) :: buf)
-        val wmMicros = state.getCurrentWatermarkMs() * 1000L
-        val (mature, pending) = buf.partition(_._1 <= wmMicros)
-        val released = mature.sortBy(identity)
-        state.update(State(pending, cur.emitted + released.size))
-        if (pending.nonEmpty)
-          state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        released.iterator.zipWithIndex.map { case ((ts, id), i) =>
-          SortEmit(key, id, ts, cur.emitted + i + 1)
-        }
+            watermarkDelay: String = "1 minute"): Dataset[SortEmit] =
+    WatermarkFold(ds, watermarkDelay, init = 0L) { (emitted, e) =>
+      (emitted + 1, Some(SortEmit(e.key, e.id, e.tsMicros, emitted + 1)))
     }
-  }
 }
 
 /** Emitted by StreamingConnect: data events in watermark-matured
@@ -55,42 +33,20 @@ case class ConnectEmit(key: Long, id: Long, tsMicros: Long, muted: Boolean)
   * and a data stream share keyed state. Here both arrive as one keyed
   * stream; control kinds toggle a per-key gate (`controlOn` mutes,
   * `controlOff` unmutes) and every other kind is emitted with the gate
-  * state in force when it occurred. Events are buffered until the
-  * watermark and processed in (event-time, id) order, so control/data
+  * state in force when it occurred. Events are released by
+  * [[WatermarkFold]] in (event-time, id) order, so control/data
   * interleaving is deterministic — the two-input operator's
   * processElement1/processElement2 race resolved by event time.
   */
 object StreamingConnect {
-  case class State(pending: List[(Long, Long, String)], muted: Boolean)
-
   def apply(spark: SparkSession, ds: Dataset[GEvent], controlOn: String,
             controlOff: String,
-            watermarkDelay: String = "1 minute"): Dataset[ConnectEmit] = {
-    import spark.implicits._
-    val withTs = ds
-      .withColumn("ts", timestamp_micros(col("tsMicros")))
-      .withWatermark("ts", watermarkDelay)
-      .as[GEvent]
-    withTs.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        val cur = state.getOption.getOrElse(State(Nil, muted = false))
-        var pending = cur.pending
-        rows.foreach(e => pending = (e.tsMicros, e.id, e.kind) :: pending)
-        val wmMicros = state.getCurrentWatermarkMs() * 1000L
-        val (mature, rest) = pending.partition(_._1 <= wmMicros)
-        var muted = cur.muted
-        val out = mature.sortBy(e => (e._1, e._2)).flatMap {
-          case (_, _, k) if k == controlOn  => muted = true; None
-          case (_, _, k) if k == controlOff => muted = false; None
-          case (ts, id, _) => Some(ConnectEmit(key, id, ts, muted))
-        }
-        state.update(State(rest, muted))
-        if (rest.nonEmpty)
-          state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        out.iterator
+            watermarkDelay: String = "1 minute"): Dataset[ConnectEmit] =
+    WatermarkFold(ds, watermarkDelay, init = false) { (muted, e) =>
+      if (e.kind == controlOn) (true, None)
+      else if (e.kind == controlOff) (false, None)
+      else (muted, Some(ConnectEmit(e.key, e.id, e.tsMicros, muted)))
     }
-  }
 }
 
 /** Input/output rows of the late-fire window aggregate. */

@@ -152,12 +152,10 @@ object StreamingGraphCC {
   def run(spark: SparkSession, edgeStream: DataFrame,
           maxIterationsPerBatch: Int = 10): DataFrame = {
     val cc = new StreamingGraphCC(maxIterationsPerBatch)
-    LocalCheckpointFileManager.install(spark)
-    val q = edgeStream.writeStream
+    val q = StreamRunner.start(spark, edgeStream.writeStream
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch(cc.sink)
-      .start()
+      .foreachBatch(cc.sink))
     try q.awaitTermination() finally if (q.isActive) q.stop()
     cc.currentLabels(spark)
   }

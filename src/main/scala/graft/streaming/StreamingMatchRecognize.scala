@@ -109,7 +109,7 @@ object StreamingMatchRecognize {
     // RCmp trees
     val (navCol, navSCol) = PatternNFA.navProjections(navCols,
       PatternNFA.navStringFlags(events, navCols))
-    val varNames = preds.map(_._1)
+    val pattern = PatternNFA.compileSteps(steps, preds.map(_._1), defCtx)
     val within = withinMicros
 
     // the watermark column must survive the projection — event-time
@@ -134,9 +134,8 @@ object StreamingMatchRecognize {
         val wm = state.getCurrentWatermarkMs() * 1000L
         val mark0 = if (cur.hasMark)
           Some(PatternNFA.Mark(cur.markTs, cur.markId, cur.markIncl)) else None
-        val (emitted, mark) = PatternNFA.scanMature(key, buffered, steps,
-          varNames, within, afterMatch, wm, mark0, defCtx, strict, mode)(
-          onMatch, onTimeout)
+        val (emitted, mark) = PatternNFA.scanMature(key, buffered, pattern,
+          within, afterMatch, wm, mark0, strict, mode)(onMatch, onTimeout)
         // eviction bound == maturity bound: kept events are exactly the
         // not-yet-mature suffix of the buffer
         val kept = buffered.filter { case (ts, _, _, _, _) => ts + within > wm }
@@ -270,7 +269,6 @@ object StreamingMatchRecognize {
     require(!c.allRows, "streaming MATCH_RECOGNIZE is ONE ROW PER MATCH only " +
       "(the reference has the same restriction)")
     val preds = c.defines.map { case (n, body) => n -> expr(body) }
-    val varNames = preds.map(_._1)
     val satCol = preds.zipWithIndex.map { case ((_, p), i) =>
       when(p, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
@@ -304,7 +302,7 @@ object StreamingMatchRecognize {
           steps.indexWhere(_.kind == mv)).sorted).toMap
 
     val navCols = c.navCols
-    val defCtx = c.ctx
+    val pattern = PatternNFA.compileSteps(steps, preds.map(_._1), c.ctx)
     val (navCol, navSCol) = PatternNFA.navProjections(navCols,
       PatternNFA.navStringFlags(events, navCols))
     val withEt =
@@ -350,8 +348,8 @@ object StreamingMatchRecognize {
           (ts, id, sat, nav, navS) }
         val mvalsOf = buffered.map { case (ts, id, _, mv, _, _) =>
           (ts, id) -> mv }.toMap
-        val (rawMatches, mark) = PatternNFA.scanMature(key, quads, steps,
-          varNames, within, afterMatch, wm, mark0, defCtx, strict = true)(
+        val (rawMatches, mark) = PatternNFA.scanMature(key, quads, pattern,
+          within, afterMatch, wm, mark0, strict = true)(
           onMatch = (_, m, _) => Seq(m.pairs))
         var seq = cur.matchSeq
         def fold(m: MatchRecognize.Measure,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Canonical keyed event shape used by the stateful streaming
   * operators (micros since epoch for event time — exact arithmetic in
@@ -243,19 +243,17 @@ object StreamingDedupKeepLast {
 }
 
 /** Streaming as-of (temporal) join — TemporalRowTimeJoinOperator.java:70
-  * semantics: buffer both sides in keyed state; when the watermark
-  * passes a left row's time, join it to the latest right version at or
-  * before it; prune right history to (latest ≤ watermark) + newer —
-  * bounded state, watermark-driven cleanup.
+  * semantics: when the watermark passes a left row's time, join it to
+  * the latest right version at or before it. Both sides are released
+  * by [[WatermarkFold]], rights before lefts at equal event time; the
+  * accumulator keeps only the latest released right version, so state
+  * is bounded and watermark-driven.
   *
   * Late-data rule: rows older than the watermark are dropped by Spark
   * before reaching the operator (EventTimeTimeout path) — identical to
   * the reference's late-record handling at the watermark boundary.
   */
 object StreamingAsOfJoin {
-  case class State(rights: List[(Long, Long)], lefts: List[(Long, Long)],
-                   lastActivityMicros: Long = Long.MinValue)
-
   /** idleRetentionMicros: once the watermark passes a key's last
     * arrival by this much, the key's residual state (the buffered
     * latest right version) is evicted — the reference's idle-state
@@ -268,54 +266,23 @@ object StreamingAsOfJoin {
     import spark.implicits._
     val tagged = left.map(e => e.copy(kind = "L"))
       .union(right.map(e => e.copy(kind = "R")))
-      .withColumn("ts", timestamp_micros(col("tsMicros")))
-      .withWatermark("ts", watermarkDelay)
-      .as[GEvent]
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        val cur = state.getOption.getOrElse(State(Nil, Nil))
-        var rights = cur.rights
-        var lefts = cur.lefts
-        var lastAct = cur.lastActivityMicros
-        rows.foreach { e =>
-          lastAct = lastAct max e.tsMicros
-          if (e.kind == "R") rights = (e.tsMicros, e.id) :: rights
-          else lefts = (e.tsMicros, e.id) :: lefts
-        }
-        val wmMicros = state.getCurrentWatermarkMs() * 1000L
-        val (mature, pending) = lefts.partition(_._1 <= wmMicros)
-        val out = mature.sortBy(l => (l._1, l._2)).map { case (lts, lid) =>
-          val m = rights.filter(_._1 <= lts)
-          if (m.isEmpty) AsOfEmit(key, lid, lts, -1L, -1L, matched = false)
-          else {
-            val best = m.maxBy(r => (r._1, r._2))
-            AsOfEmit(key, lid, lts, best._2, best._1, matched = true)
-          }
-        }
-        // prune: latest right ≤ watermark is still joinable to future
-        // lefts (ts > wm); anything older is dead state.
-        val (oldR, newR) = rights.partition(_._1 <= wmMicros)
-        val keptR = if (oldR.isEmpty) newR
-                    else oldR.maxBy(r => (r._1, r._2)) :: newR
-        val idleEvicted = idleRetentionMicros != Long.MaxValue &&
-          lastAct != Long.MinValue && wmMicros >= lastAct + idleRetentionMicros
-        if (pending.isEmpty && (keptR.isEmpty || idleEvicted)) {
-          // nothing semantically live (or idle past retention): free
-          // the key's entry instead of parking an empty/stale record.
-          if (state.exists) state.remove()
-        } else {
-          state.update(State(keptR, pending, lastAct))
-          // event-time timeout: flush pending lefts on the next no-data
-          // micro-batch, or fire at the idle-retention horizon.
-          if (pending.nonEmpty)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-          else if (idleRetentionMicros != Long.MaxValue)
-            state.setTimeoutTimestamp(
-              ((lastAct + idleRetentionMicros) / 1000L + 1)
-                max (state.getCurrentWatermarkMs() + 1))
-        }
-        out.iterator
+    // accumulator: the latest right (ts, id), and the key's last event
+    // time; with no right there is nothing to keep once lefts drain
+    val init: (Option[(Long, Long)], Long) = (None, Long.MinValue)
+    val expiresAt = (a: (Option[(Long, Long)], Long)) =>
+      if (a._1.isEmpty) Long.MinValue
+      else if (idleRetentionMicros == Long.MaxValue) Long.MaxValue
+      else a._2 + idleRetentionMicros
+    WatermarkFold(tagged, watermarkDelay, init, WatermarkFold.rightsFirst,
+        expiresAt) { case ((latest, last), e) =>
+      val seen = last max e.tsMicros
+      if (e.kind == "R") {
+        val r = (e.tsMicros, e.id)
+        ((Some(latest.fold(r)(Ordering[(Long, Long)].max(_, r))), seen), None)
+      } else ((latest, seen), Some(latest match {
+        case Some((rts, rid)) => AsOfEmit(e.key, e.id, e.tsMicros, rid, rts, matched = true)
+        case None => AsOfEmit(e.key, e.id, e.tsMicros, -1L, -1L, matched = false)
+      }))
     }
   }
 }
@@ -373,45 +340,21 @@ case class SemiEmit(key: Long, id: Long, tsMicros: Long, matched: Boolean)
   * judged ONCE, at watermark maturity, against the rights with
   * `right.ts <= left.ts` (rows the stream had actually seen by the
   * left row's event time), so the append-mode output is deterministic
-  * and batch-equal. State is O(1) per key: matured sides process in
-  * (ts, side, id) order against a running right-row counter — no
-  * right-side history is retained at all (plus the not-yet-mature
-  * buffer the watermark bounds).
+  * and batch-equal. Both sides are released by [[WatermarkFold]],
+  * rights before lefts at equal event time, and the accumulator is
+  * one flag, whether the key has released a right yet: no right-side
+  * history is retained (plus the not-yet-mature buffer the watermark
+  * bounds).
   */
 object StreamingSemiAntiJoin {
-  case class State(nRights: Long, pending: List[(Long, Long, Boolean)])
-
   def apply(spark: SparkSession, left: Dataset[GEvent], right: Dataset[GEvent],
             watermarkDelay: String = "1 minute"): Dataset[SemiEmit] = {
     import spark.implicits._
     val tagged = left.map(_.copy(kind = "L")).union(right.map(_.copy(kind = "R")))
-      .withColumn("ts", timestamp_micros(col("tsMicros")))
-      .withWatermark("ts", watermarkDelay)
-      .as[GEvent]
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        val cur = state.getOption.getOrElse(State(0L, Nil))
-        var pending = cur.pending
-        rows.foreach(e => pending = (e.tsMicros, e.id, e.kind == "R") :: pending)
-        val wm = state.getCurrentWatermarkMs() * 1000L
-        val (mature, stillPending) = pending.partition(_._1 <= wm)
-        var nRights = cur.nRights
-        // rights sort before lefts at the same timestamp: an exact-tie
-        // right counts for the left (EXISTS at ts is inclusive)
-        val out = mature.sortBy { case (ts, id, isR) => (ts, !isR, id) }
-          .flatMap { case (ts, id, isR) =>
-            if (isR) { nRights += 1; None }
-            else Some(SemiEmit(key, id, ts, nRights > 0))
-          }
-        if (stillPending.isEmpty && nRights == 0L) {
-          if (state.exists) state.remove()
-        } else {
-          state.update(State(nRights, stillPending))
-          if (stillPending.nonEmpty)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        }
-        out.iterator
+    WatermarkFold(tagged, watermarkDelay, init = false, WatermarkFold.rightsFirst) {
+      (anyRight, e) =>
+        if (e.kind == "R") (true, None)
+        else (anyRight, Some(SemiEmit(e.key, e.id, e.tsMicros, anyRight)))
     }
   }
 }
@@ -517,6 +460,13 @@ object StreamRunner {
     }
   }
 
+  /** Starts `writer` with [[LocalCheckpointFileManager]] installed on
+    * `spark`: every streaming query of the engine starts here. */
+  def start(spark: SparkSession, writer: DataStreamWriter[_]): StreamingQuery = {
+    LocalCheckpointFileManager.install(spark)
+    writer.start()
+  }
+
   def toTable(spark: SparkSession, df: DataFrame, mode: OutputMode,
               name: String, checkpointDir: Option[String] = None): DataFrame = {
     spark.catalog.dropTempView(name)
@@ -536,11 +486,10 @@ object StreamRunner {
     val scratch = if (checkpointDir.isDefined) None
       else scratchRoot.map(r => java.nio.file.Files.createTempDirectory(r, name))
     try {
-      LocalCheckpointFileManager.install(spark)
       val w0 = df.writeStream.outputMode(mode).format("memory").queryName(name)
       val w = checkpointDir.orElse(scratch.map(_.toString))
         .fold(w0)(d => w0.option("checkpointLocation", d))
-      val q = w.start()
+      val q = start(spark, w)
       try q.processAllAvailable() finally q.stop()
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 case class OverEmit(key: Long, id: Long, tsMicros: Long, frameSum: BigDecimal, nInFrame: Int)
@@ -9,129 +8,60 @@ case class OverEmit(key: Long, id: Long, tsMicros: Long, frameSum: BigDecimal, n
 /** Streaming OVER aggregation (SURVEY.md §2.5 —
   * RowTimeRowsBoundedPrecedingFunction.java semantics): per-key
   * ROWS BETWEEN k PRECEDING AND CURRENT ROW aggregate in event-time
-  * order, emitted when the row's time passes the watermark.
+  * order, one row per event once the watermark makes it final
+  * ([[WatermarkFold]]: maturity, (ts, id) order, timer, eviction).
   *
-  * State is bounded: the last k matured rows (the frame tail) plus
-  * the not-yet-mature buffer — watermark-driven cleanup, no unbounded
-  * history. Sums are computed in BigDecimal(scale 2) so emission is
-  * exact and order-independent (oracle-comparable).
+  * The accumulator is the frame tail, the last k + 1 released values,
+  * so state is bounded. Sums are computed in BigDecimal(scale 2) so
+  * emission is exact and order-independent (oracle-comparable).
   */
 object StreamingOverAgg {
-  case class State(history: List[(Long, Long, Double)],
-                   pending: List[(Long, Long, Double)])
+  private[streaming] def roundCents(v: Double): BigDecimal =
+    BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP)
 
   def apply(spark: SparkSession, events: Dataset[GEvent], kPreceding: Int,
-            watermarkDelay: String = "1 minute"): Dataset[OverEmit] = {
-    import spark.implicits._
-    val tagged = events
-      .withColumn("ts", timestamp_micros(col("tsMicros")))
-      .withWatermark("ts", watermarkDelay)
-      .as[GEvent]
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        val cur = state.getOption.getOrElse(State(Nil, Nil))
-        var pending = cur.pending
-        rows.foreach(e => pending = (e.tsMicros, e.id, e.value) :: pending)
-        val wmMicros = state.getCurrentWatermarkMs() * 1000L
-        val (mature, stillPending) = pending.partition(_._1 <= wmMicros)
-        var history = cur.history
-        val out = mature.sortBy(r => (r._1, r._2)).map { case (ts, id, v) =>
-          history = ((ts, id, v) :: history).take(kPreceding + 1)
-          val sum = history.map(h => BigDecimal(h._3).setScale(2, BigDecimal.RoundingMode.HALF_UP)).sum
-          OverEmit(key, id, ts, sum, history.size)
-        }
-        state.update(State(history, stillPending))
-        if (stillPending.nonEmpty)
-          state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        out.iterator
+            watermarkDelay: String = "1 minute"): Dataset[OverEmit] =
+    WatermarkFold(events, watermarkDelay, init = List.empty[Double]) { (tail, e) =>
+      val frame = (e.value :: tail).take(kPreceding + 1)
+      (frame, Some(OverEmit(e.key, e.id, e.tsMicros, frame.map(roundCents).sum, frame.size)))
     }
-  }
 }
 
 /** UNBOUNDED PRECEDING variant (SURVEY.md §2.5 —
   * RowTimeRowsUnboundedPrecedingFunction.java semantics): per-key
   * running aggregate over ALL rows up to the current one in
-  * (event-time, id) order, emitted at watermark maturity. State is a
-  * single O(1) accumulator (running sum + count, BigDecimal-exact)
-  * plus the not-yet-mature buffer — the smallest state footprint of
-  * the over family: no frame tail is retained at all.
+  * (event-time, id) order, released by [[WatermarkFold]]. The
+  * accumulator is O(1), a running sum in integer cents (values are
+  * 2-dp money, so the sum is exact) and a count: the smallest state
+  * footprint of the over family, no frame tail at all.
   */
 object StreamingUnboundedOverAgg {
-  case class State(sumCents: Long, n: Int, pending: List[(Long, Long, Double)])
-
   def apply(spark: SparkSession, events: Dataset[GEvent],
-            watermarkDelay: String = "1 minute"): Dataset[OverEmit] = {
-    import spark.implicits._
-    val tagged = events
-      .withColumn("ts", timestamp_micros(col("tsMicros")))
-      .withWatermark("ts", watermarkDelay)
-      .as[GEvent]
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        val cur = state.getOption.getOrElse(State(0L, 0, Nil))
-        var pending = cur.pending
-        rows.foreach(e => pending = (e.tsMicros, e.id, e.value) :: pending)
-        val wmMicros = state.getCurrentWatermarkMs() * 1000L
-        val (mature, stillPending) = pending.partition(_._1 <= wmMicros)
-        // exact running sum in integer cents (values are 2-dp money)
-        var sumCents = cur.sumCents
-        var n = cur.n
-        val out = mature.sortBy(r => (r._1, r._2)).map { case (ts, id, v) =>
-          sumCents += BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP)
-            .*(100).toLongExact
-          n += 1
-          OverEmit(key, id, ts, BigDecimal(sumCents) / 100, n)
-        }
-        state.update(State(sumCents, n, stillPending))
-        if (stillPending.nonEmpty)
-          state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        out.iterator
+            watermarkDelay: String = "1 minute"): Dataset[OverEmit] =
+    WatermarkFold(events, watermarkDelay, init = (0L, 0)) { case ((sumCents, n), e) =>
+      val sum = sumCents + (StreamingOverAgg.roundCents(e.value) * 100).toLongExact
+      ((sum, n + 1), Some(OverEmit(e.key, e.id, e.tsMicros, BigDecimal(sum) / 100, n + 1)))
     }
-  }
 }
 
 /** RANGE-frame variant (RowTimeRangeBoundedPrecedingFunction.java
-  * semantics): per-key sum over events in [t − range, t], emitted at
-  * watermark maturity; history pruned to the range window → bounded
-  * state. Same-timestamp peers are summed in (ts, id) processing
-  * order — a peer with a higher id is not yet visible to a lower-id
-  * row at the identical timestamp (SQL RANGE frames include all
-  * peers; identical-timestamp keys don't occur in the driver data).
+  * semantics): per-key sum over events in [t − range, t], released by
+  * [[WatermarkFold]]; the accumulator is the (ts, value) history
+  * pruned to the range window, so state is bounded. Same-timestamp
+  * peers are summed in (ts, id) release order — a peer with a higher
+  * id is not yet visible to a lower-id row at the identical timestamp
+  * (SQL RANGE frames include all peers; identical-timestamp keys
+  * don't occur in the driver data).
   */
 object StreamingRangeOverAgg {
-  case class State(history: List[(Long, Long, Double)],
-                   pending: List[(Long, Long, Double)])
-
   def apply(spark: SparkSession, events: Dataset[GEvent], rangeMicros: Long,
-            watermarkDelay: String = "1 minute"): Dataset[OverEmit] = {
-    import spark.implicits._
-    val tagged = events
-      .withColumn("ts", timestamp_micros(col("tsMicros")))
-      .withWatermark("ts", watermarkDelay)
-      .as[GEvent]
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        val cur = state.getOption.getOrElse(State(Nil, Nil))
-        var pending = cur.pending
-        rows.foreach(e => pending = (e.tsMicros, e.id, e.value) :: pending)
-        val wmMicros = state.getCurrentWatermarkMs() * 1000L
-        val (mature, stillPending) = pending.partition(_._1 <= wmMicros)
-        var history = cur.history
-        val out = mature.sortBy(r => (r._1, r._2)).map { case (ts, id, v) =>
-          history = ((ts, id, v) :: history).filter(_._1 >= ts - rangeMicros)
-          val inFrame = history.filter(h => h._1 >= ts - rangeMicros && h._1 <= ts)
-          val sum = inFrame.map(h => BigDecimal(h._3).setScale(2, BigDecimal.RoundingMode.HALF_UP)).sum
-          OverEmit(key, id, ts, sum, inFrame.size)
-        }
-        state.update(State(history, stillPending))
-        if (stillPending.nonEmpty)
-          state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-        out.iterator
+            watermarkDelay: String = "1 minute"): Dataset[OverEmit] =
+    WatermarkFold(events, watermarkDelay, init = List.empty[(Long, Double)]) { (history, e) =>
+      val kept = ((e.tsMicros, e.value) :: history).filter(_._1 >= e.tsMicros - rangeMicros)
+      val inFrame = kept.filter(_._1 <= e.tsMicros)
+      (kept, Some(OverEmit(e.key, e.id, e.tsMicros,
+        inFrame.map(h => StreamingOverAgg.roundCents(h._2)).sum, inFrame.size)))
     }
-  }
 }
 
 case class JoinEmit(key: Long, leftId: Long, rightId: Long)
@@ -154,15 +84,13 @@ case class OuterJoinEmit(key: Long, leftId: Long, rightId: Long,
   * matched left is retracted exactly once — so the folded result
   * equals the batch left outer join regardless of batching.
   *
-  * State mirrors StreamingSymmetricJoin (both sides buffered per
-  * key; `idleRetentionMicros` evicts rows older than the key's max
-  * event time minus retention — evicted unmatched lefts keep their
-  * pad, the reference's idle-state-retention trade).
+  * It is [[StreamingFullOuterJoin]]'s fold with the right-side pads
+  * off: a right that arrives before any left is buffered silently and
+  * so is never retracted. `idleRetentionMicros` is the full-outer
+  * eviction (evicted unmatched lefts keep their pad, the reference's
+  * idle-state-retention trade).
   */
 object StreamingLeftOuterJoin {
-  case class State(lefts: List[(Long, Long, Boolean)],
-                   rights: List[(Long, Long)])
-
   /** `updateBefore = true` switches the pad replacement to the
     * reference's RETRACT mode (StreamingJoinOperator.java:277 emits
     * UPDATE_BEFORE/UPDATE_AFTER): the first match of a previously
@@ -173,52 +101,9 @@ object StreamingLeftOuterJoin {
     * way: net (+I/+U) minus (-U/-D) per (key, leftId, rightId). */
   def apply(spark: SparkSession, left: Dataset[GEvent], right: Dataset[GEvent],
             idleRetentionMicros: Long = Long.MaxValue,
-            updateBefore: Boolean = false): Dataset[OuterJoinEmit] = {
-    import spark.implicits._
-    val tagged = left.map(_.copy(kind = "L")).union(right.map(_.copy(kind = "R")))
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        var st = state.getOption.getOrElse(State(Nil, Nil))
-        val out = scala.collection.mutable.ListBuffer.empty[OuterJoinEmit]
-        var maxTs = (st.lefts.map(_._1) ++ st.rights.map(_._1))
-          .foldLeft(Long.MinValue)(_ max _)
-        rows.toSeq.sortBy(e => (e.tsMicros, e.id)).foreach { e =>
-          maxTs = maxTs max e.tsMicros
-          if (e.kind == "L") {
-            if (st.rights.isEmpty) {
-              out += OuterJoinEmit(key, e.id, -1L, "+I") // null-padded
-              st = st.copy(lefts = (e.tsMicros, e.id, false) :: st.lefts)
-            } else {
-              st.rights.foreach { case (_, r) =>
-                out += OuterJoinEmit(key, e.id, r, "+I") }
-              st = st.copy(lefts = (e.tsMicros, e.id, true) :: st.lefts)
-            }
-          } else {
-            // first match of a previously-unmatched left retracts its
-            // pad: -D/+I upsert-style, or the -U/+U retract pair
-            st.lefts.foreach { case (_, l, matched) =>
-              if (!matched) {
-                out += OuterJoinEmit(key, l, -1L, if (updateBefore) "-U" else "-D")
-                out += OuterJoinEmit(key, l, e.id, if (updateBefore) "+U" else "+I")
-              } else out += OuterJoinEmit(key, l, e.id, "+I")
-            }
-            st = st.copy(
-              lefts = st.lefts.map { case (ts, l, _) => (ts, l, true) },
-              rights = (e.tsMicros, e.id) :: st.rights)
-          }
-        }
-        if (idleRetentionMicros != Long.MaxValue) {
-          val floor = maxTs - idleRetentionMicros
-          st = State(st.lefts.filter(_._1 >= floor),
-            st.rights.filter(_._1 >= floor))
-        }
-        if (st.lefts.isEmpty && st.rights.isEmpty) {
-          if (state.exists) state.remove()
-        } else state.update(st)
-        out.iterator
-    }
-  }
+            updateBefore: Boolean = false): Dataset[OuterJoinEmit] =
+    StreamingFullOuterJoin.fold(spark, left, right, idleRetentionMicros,
+      rightPads = false, updateBefore)
 }
 
 /** Unbounded stream-stream FULL OUTER equi-join — the reference's
@@ -236,13 +121,25 @@ object StreamingLeftOuterJoin {
   * bounded by the retention span instead of growing with the stream.
   */
 object StreamingFullOuterJoin {
+  /** Both sides' buffered (ts, id, matched) rows. */
   case class State(lefts: List[(Long, Long, Boolean)],
                    rights: List[(Long, Long, Boolean)])
 
   def apply(spark: SparkSession, left: Dataset[GEvent],
             right: Dataset[GEvent],
-            idleRetentionMicros: Long = Long.MaxValue): Dataset[OuterJoinEmit] = {
+            idleRetentionMicros: Long = Long.MaxValue): Dataset[OuterJoinEmit] =
+    fold(spark, left, right, idleRetentionMicros, rightPads = true,
+      updateBefore = false)
+
+  /** The outer-join changelog fold. Lefts are always padded; rights
+    * only with `rightPads`. `updateBefore` replaces a left pad with the
+    * -U/+U pair instead of -D/+I (right pads always retract as -D). */
+  private[streaming] def fold(spark: SparkSession, left: Dataset[GEvent],
+                              right: Dataset[GEvent], idleRetentionMicros: Long,
+                              rightPads: Boolean,
+                              updateBefore: Boolean): Dataset[OuterJoinEmit] = {
     import spark.implicits._
+    val (leftDel, leftAdd) = if (updateBefore) ("-U", "+U") else ("-D", "+I")
     val tagged = left.map(_.copy(kind = "L")).union(right.map(_.copy(kind = "R")))
     tagged.groupByKey(_.key).flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -253,31 +150,22 @@ object StreamingFullOuterJoin {
           .foldLeft(Long.MinValue)(_ max _)
         rows.toSeq.sortBy(e => (e.tsMicros, e.id)).foreach { e =>
           maxTs = maxTs max e.tsMicros
-          if (e.kind == "L") {
-            if (st.rights.isEmpty) {
-              out += OuterJoinEmit(key, e.id, -1L, "+I")
-              st = st.copy(lefts = (e.tsMicros, e.id, false) :: st.lefts)
-            } else {
-              st.rights.foreach { case (_, r, matched) =>
-                if (!matched) out += OuterJoinEmit(key, -1L, r, "-D")
-                out += OuterJoinEmit(key, e.id, r, "+I")
-              }
-              st = State((e.tsMicros, e.id, true) :: st.lefts,
-                st.rights.map { case (ts, r, _) => (ts, r, true) })
-            }
-          } else {
-            if (st.lefts.isEmpty) {
-              out += OuterJoinEmit(key, -1L, e.id, "+I")
-              st = st.copy(rights = (e.tsMicros, e.id, false) :: st.rights)
-            } else {
-              st.lefts.foreach { case (_, l, matched) =>
-                if (!matched) out += OuterJoinEmit(key, l, -1L, "-D")
-                out += OuterJoinEmit(key, l, e.id, "+I")
-              }
-              st = State(st.lefts.map { case (ts, l, _) => (ts, l, true) },
-                (e.tsMicros, e.id, true) :: st.rights)
-            }
+          val isLeft = e.kind == "L"
+          def row(other: Long, kind: String) =
+            if (isLeft) OuterJoinEmit(key, e.id, other, kind)
+            else OuterJoinEmit(key, other, e.id, kind)
+          val others = if (isLeft) st.rights else st.lefts
+          if (others.isEmpty && (isLeft || rightPads)) out += row(-1L, "+I")
+          // an unmatched padded row's first match retracts its pad
+          others.foreach { case (_, o, matched) =>
+            val padded = !matched && (!isLeft || rightPads)
+            if (padded) out += (if (isLeft) OuterJoinEmit(key, -1L, o, "-D")
+              else OuterJoinEmit(key, o, -1L, leftDel))
+            out += row(o, if (padded && !isLeft) leftAdd else "+I")
           }
+          val mine = (e.tsMicros, e.id, others.nonEmpty)
+          val seen = others.map { case (ts, o, _) => (ts, o, true) }
+          st = if (isLeft) State(mine :: st.lefts, seen) else State(seen, mine :: st.rights)
         }
         if (idleRetentionMicros != Long.MaxValue) {
           val floor = maxTs - idleRetentionMicros

@@ -138,6 +138,20 @@ class CepParitySpec extends AnyFunSuite {
       }
   }
 
+  test("streaming MATCH_RECOGNIZE rejects a DEFINE forward reference before any query starts") {
+    // batch MatchRecognize.run rejects this clause when it is called
+    // (BatchOpsSpec); the streaming door must too, not in a micro-batch
+    val fwd = intercept[RuntimeException] {
+      StreamingMatchRecognize(spark, StreamHarness.mkStream().toDS().toDF(),
+        """MATCH_RECOGNIZE (PARTITION BY key ORDER BY ts
+          |  PATTERN (A B) WITHIN INTERVAL '1' MINUTE
+          |  DEFINE A AS kind = 'A' AND A.value > B.value,
+          |         B AS kind = 'B')""".stripMargin)
+    }
+    assert(fwd.getMessage.contains("LATER"), fwd.getMessage)
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("streaming pattern accepts every until-kind and group step batch run accepts") {
     // the until-kind "x" and the group's sub-step kinds name no
     // top-level step: the streaming door must still compile them to
