@@ -1711,12 +1711,12 @@ object PatternNFA {
     }
   }
 
-  /** Steps compiled once, on the driver: pattern variable `i` of
-    * `varNames` is bit `i` of the satisfaction mask. The streaming
-    * doors compile at construction, so an invalid pattern (an unknown
-    * variable, a DEFINE forward reference) fails when the query is
-    * built, as in batch, and [[scanMature]] reuses the compiled nodes
-    * on every trigger. */
+  /** Steps compiled once, when the query is built: pattern variable
+    * `i` of `varNames` is bit `i` of the satisfaction mask. The
+    * streaming doors compile at construction, so an invalid pattern (an
+    * unknown variable, a DEFINE forward reference) fails before the
+    * query starts, as in batch, and [[scanMature]] reuses the compiled
+    * nodes on every trigger. */
   private[graft] final class Compiled private[PatternNFA] (
       private[PatternNFA] val isteps: Seq[INode]) extends Serializable
 

@@ -51,7 +51,7 @@ object StreamingUnboundedOverAgg {
   * peers are summed in (ts, id) release order — a peer with a higher
   * id is not yet visible to a lower-id row at the identical timestamp
   * (SQL RANGE frames include all peers; identical-timestamp keys
-  * don't occur in the driver data).
+  * don't occur in the test data).
   */
 object StreamingRangeOverAgg {
   def apply(spark: SparkSession, events: Dataset[GEvent], rangeMicros: Long,
