@@ -9,7 +9,9 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Batching and restart invariance of the event-time operators that
-  * release a key's rows in watermark order: the same input fed as one
+  * release a key's rows in watermark order and of the streaming CEP
+  * operators (MATCH_RECOGNIZE with and without MEASURES, and the
+  * two-step `StreamingCEP`): the same input fed as one
   * micro-batch, as micro-batches of three events, and as micro-batches
   * of three with the query stopped and restarted from its checkpoint
   * between batches must emit the same rows. Inputs are small seeded
@@ -55,6 +57,20 @@ class StreamingRestartSpec extends AnyFunSuite {
   private def side(ds: Dataset[GEvent], kind: String): Dataset[GEvent] =
     ds.filter(col("kind") === kind)
 
+  /** A MATCH_RECOGNIZE clause over the L/R kinds whose window spans
+    * several events of a key, with or without a MEASURES list. */
+  private def clause(measuresList: String): String =
+    s"""MATCH_RECOGNIZE (PARTITION BY key ORDER BY ts
+       |  $measuresList
+       |  PATTERN (A B+ C?) WITHIN INTERVAL '10' SECOND
+       |  DEFINE A AS kind = 'L', B AS kind = 'R', C AS kind = 'L')""".stripMargin
+
+  private val measures =
+    """MEASURES MATCH_NUMBER() AS mno, SUM(B.value) AS sum_b,
+      |         FIRST(B.id) AS first_b, LAST(B.value) AS last_b,
+      |         COUNT(*) AS n, CLASSIFIER() AS cls, MATCH_ROWTIME() AS mrt
+      |  ONE ROW PER MATCH""".stripMargin
+
   private val operators: Seq[(String, Dataset[GEvent] => DataFrame)] = Seq(
     "over" -> (ds => StreamingOverAgg(spark, ds, kPreceding = 2, delay).toDF()),
     "unbounded_over" -> (ds => StreamingUnboundedOverAgg(spark, ds, delay).toDF()),
@@ -65,7 +81,13 @@ class StreamingRestartSpec extends AnyFunSuite {
     "semi_anti" -> (ds =>
       StreamingSemiAntiJoin(spark, side(ds, "L"), side(ds, "R"), delay).toDF()),
     "asof" -> (ds =>
-      StreamingAsOfJoin(spark, side(ds, "L"), side(ds, "R"), delay).toDF()))
+      StreamingAsOfJoin(spark, side(ds, "L"), side(ds, "R"), delay).toDF()),
+    "match_recognize_measures" -> (ds =>
+      StreamingMatchRecognize.measures(spark, ds.toDF(), clause(measures), delay)),
+    "match_recognize" -> (ds =>
+      StreamingMatchRecognize(spark, ds.toDF(), clause(""), delay).toDF()),
+    "cep" -> (ds => StreamingCEP(spark, ds, aKind = "L", bKind = "R",
+      withinMicros = 5000000L, delay).toDF()))
 
   private def sorted(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
 
