@@ -152,8 +152,8 @@ import org.apache.spark.sql.functions._
   *    buffer): once the watermark has passed anchor.ts + within.
   * Either way every event the window could bind is final when the
   * anchor is offered, so both emit the same rows for the same input.
-  * (graft.streaming.StreamingCEP and SimpleCEP remain as separate
-  * two-step engines; see ROADMAP.)
+  * (SimpleCEP and graft.streaming.StreamingCEP, a two-step fold on
+  * graft.streaming.WatermarkFold, remain separate; see ROADMAP.)
   */
 object PatternNFA {
 
@@ -868,20 +868,24 @@ object PatternNFA {
   /** The emitter of an output the door does not produce. */
   private[graft] def noRows[A, O]: (Long, A, Long) => Seq[O] = (_, _, _) => Nil
 
-  /** Which navigation columns are STRING-typed in `events` — those
-    * ride the scan in the parallel string array (same index space;
-    * their numeric slot holds NaN and vice versa). */
-  private[graft] def navStringFlags(events: DataFrame,
-                                    navCols: Seq[String]): Seq[Boolean] =
-    if (navCols.isEmpty) Nil
-    else events.select(navCols.map(col): _*).schema
-      .map(_.dataType == org.apache.spark.sql.types.StringType).toSeq
-
-  /** The two typed navigation projections mirrored by the streaming
-    * operator's state columns (NaN / null = SQL NULL). */
-  private[graft] def navProjections(navCols: Seq[String],
-                                    isStr: Seq[Boolean])
-      : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {
+  /** The scan's input projection, shared by the batch runner and the
+    * streaming operator: (key, tsMicros, id) as longs, the DEFINE
+    * predicates evaluated once per event into a bitmask (variable `i` =
+    * bit `i`, at most 64 variables), and the navigation columns as two
+    * typed arrays of one index space: numeric in `_nav` (NaN = SQL
+    * NULL), STRING-typed in `_navS` (null = SQL NULL), each slot empty
+    * in the array of the other type. */
+  private[graft] def scanColumns(events: DataFrame,
+                                 varPreds: Seq[(String, org.apache.spark.sql.Column)],
+                                 navCols: Seq[String]): Seq[org.apache.spark.sql.Column] = {
+    require(varPreds.size <= 64, "at most 64 pattern variables")
+    val satCol = varPreds.zipWithIndex.map { case ((_, p), i) =>
+      when(p, lit(1L << i)).otherwise(lit(0L))
+    }.reduce(_ + _)
+    val isStr =
+      if (navCols.isEmpty) Nil
+      else events.select(navCols.map(col): _*).schema
+        .map(_.dataType == org.apache.spark.sql.types.StringType).toSeq
     val navD =
       if (navCols.isEmpty) lit(Array.empty[Double])
       else array(navCols.zip(isStr).map { case (c, s) =>
@@ -893,13 +897,15 @@ object PatternNFA {
       else array(navCols.zip(isStr).map { case (c, s) =>
         if (s) col(c).cast("string") else lit(null).cast("string")
       }: _*)
-    (navD, navS)
+    Seq(col("key").cast("long"), col("tsMicros").cast("long"),
+      col("id").cast("long"), satCol.cast("long").as("_sat"),
+      navD.as("_nav"), navS.as("_navS"))
   }
 
   /** Common front half of the run shapes: validate, resolve steps onto
     * variable bits, resolve context predicates onto step indices, and
-    * project events down to the NFA's (key, ts, id, bitmask, nav)
-    * dataset with row-local predicates pre-evaluated map-side. */
+    * project events down to the NFA's [[scanColumns]] with row-local
+    * predicates pre-evaluated map-side. */
   private def prepare(events: DataFrame, steps: Seq[Step],
                       varPreds: Seq[(String, org.apache.spark.sql.Column)],
                       navCols: Seq[String], ctx: Map[String, Seq[CtxCmp]],
@@ -917,17 +923,8 @@ object PatternNFA {
         steps.head.quant.isInstanceOf[GroupTimes]),
       "first step must be quantifier One (anchor), a loop, or a " +
         "group (loop/group-first anchoring)")
-    require(varPreds.size <= 64, "at most 64 pattern variables")
     val isteps = compileSteps(steps, varPreds.map(_._1), ctx, untilCtx).isteps
-    val satCol = varPreds.zipWithIndex.map { case ((_, p), i) =>
-      when(p, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    val (navCol, navSCol) =
-      navProjections(navCols, navStringFlags(events, navCols))
-    val ds = events.select(
-        col("key").cast("long"), col("tsMicros").cast("long"),
-        col("id").cast("long"), satCol.cast("long").as("_sat"),
-        navCol.as("_nav"), navSCol.as("_navS"))
+    val ds = events.select(scanColumns(events, varPreds, navCols): _*)
       .as[(Long, Long, Long, Long, Array[Double], Array[String])]
     (isteps, ds)
   }

@@ -27,12 +27,8 @@ object Streaming extends QueryGroup {
     * st33 checkpoint tree must outlive the LAZY state reader built
     * over it, so an in-query delete is not an option). */
   private def deleteAtExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)))
 
   /** events as an unbounded stream; ts normalized to TimestampType
     * whatever physical shape the driver generated (see Tables). */

@@ -30,8 +30,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * the reference's planner reads the partitioning and the rowtime
   * order of a MATCH), and routes: a batch view to
   * [[graft.operators.MatchRecognize.run]], a STREAMING view to
-  * [[graft.streaming.StreamingMatchRecognize]] (MEASURES batch-only
-  * there, like the reference's restriction). The partition column
+  * [[graft.streaming.StreamingMatchRecognize]] (a clause with MEASURES
+  * to its `measures` door, ONE ROW PER MATCH as in the reference; one
+  * without to the PMatch-shaped `apply`). The partition column
   * keeps its original name in the output, as the reference emits it.
   *
   * Requirements the canonicalization enforces loudly: the order
@@ -293,7 +294,7 @@ object MatchRecognizeSql {
 
   /** Execute the full statement. Batch views run the batch NFA +
     * measure aggregation; streaming views run the incremental
-    * operator (PMatch shape — MEASURES is batch-only there). */
+    * operator (the MEASURES columns, or the PMatch shape without). */
   def sql(spark: SparkSession, stmt: String): DataFrame = {
     val p = parse(stmt)
     val src = spark.table(p.table)
@@ -322,12 +323,12 @@ object MatchRecognizeSql {
     // id tiebreak as its sub-batch arrival order)
     val isProctime = src.schema.fields.find(_.name == p.orderCol)
       .exists(_.metadata.contains(GraftDDL.proctimeKey))
+    val delay = if (isProctime) "0 seconds" else "10 minutes"
     val out0 =
-      if (src.isStreaming)
-        graft.streaming.StreamingMatchRecognize(spark, events, p.clause,
-          watermarkDelay =
-            if (isProctime) "0 seconds" else "10 minutes").toDF()
-      else graft.operators.MatchRecognize.run(spark, events, p.clause)
+      if (!src.isStreaming) graft.operators.MatchRecognize.run(spark, events, p.clause)
+      else if (graft.operators.MatchRecognize.compile(p.clause).measures.nonEmpty)
+        graft.streaming.StreamingMatchRecognize.measures(spark, events, p.clause, delay)
+      else graft.streaming.StreamingMatchRecognize(spark, events, p.clause, delay).toDF()
     // the partition columns keep their declared names in the output:
     // fast path renames the canonical key back; general path joins the
     // surrogate → tuple map and leads with the partition columns (the

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import java.io.{EOFException, File, FileNotFoundException, FileOutputStream, RandomAccessFile}
+import java.io.{EOFException, FileNotFoundException, FileOutputStream, RandomAccessFile}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.commons.io.FileUtils
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{BufferedFSInputStream, FileAlreadyExistsException, FileStatus, FSDataInputStream, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
@@ -54,11 +55,7 @@ class LocalCheckpointFileManager(root: Path, hadoopConf: Configuration)
 
   override def delete(path: Path): Unit = {
     if (!local) { fallback.delete(path); return }
-    def rm(f: File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    rm(toNio(path).toFile)
+    FileUtils.deleteQuietly(toNio(path).toFile)
   }
 
   override def list(path: Path, filter: PathFilter): Array[FileStatus] = {

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import scala.reflect.runtime.universe.TypeTag
+
 import graft.operators.{MatchRecognize, PatternNFA}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -10,11 +12,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * unbounded stream; this is the Spark analog over
   * `flatMapGroupsWithState`). The batch facade compiles the clause;
   * this operator runs the SAME per-anchor scan as the batch doors
-  * ([[PatternNFA.scanMature]]), with a different completeness signal:
+  * ([[PatternNFA.scanMature]]), with a different completeness signal.
+  * Every door (the clause with and without MEASURES, the PATTERN API,
+  * both timeout side outputs) runs through one keyed state path,
+  * [[runKeyedSteps]]:
   *
   *  - DEFINE predicates are pre-evaluated map-side into a bitmask
-  *    column (identical to the batch path) so keyed state buffers only
-  *    (tsMicros, id, satMask, nav) rows — no event payloads.
+  *    column (the batch projection, [[PatternNFA.scanColumns]]) so
+  *    keyed state buffers only (tsMicros, id, satMask, nav, navS,
+  *    measure values) rows — no event payloads.
   *  - Batch offers an anchor once a later event has passed its
   *    deadline or the key has ended; this operator offers it once the
   *    watermark has: anchor.ts + within <= watermark, when every event
@@ -24,135 +30,169 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - State is bounded by the window: an event is evicted at the same
   *    bound that matures it as an anchor (ts + within <= watermark),
   *    so each anchor is offered exactly once, and per-key state holds
-  *    at most one `within` of events. An event-time timer fires at the
-  *    earliest buffered event's deadline so quiet keys still flush and
-  *    release state (idle-state hygiene).
+  *    at most one `within` of events.
   *  - The skip point of SKIP PAST LAST ROW / SKIP TO FIRST|LAST rides
   *    in state across micro-batches as a (ts, id) [[PatternNFA.Mark]];
   *    the scan turns it into a start index on the way in and back into
   *    a mark on the way out.
-  *
-  * MEASURES on streams (the reference supports exactly this: streaming
-  * MATCH_RECOGNIZE with MEASURES, ONE ROW PER MATCH only): see
-  * [[measures]] — the state additionally carries the measure columns'
-  * numeric values per event, and the per-match aggregates fold inside
-  * the state function at maturity (no join-back is possible against an
-  * unbounded stream, so the carried-column design replaces the batch
-  * path's equi-join).
+  *  - A door may carry an accumulator across triggers (the MATCH_NUMBER
+  *    counter of [[measures]]; a constant for the other doors). The
+  *    eviction rule is [[WatermarkFold]]'s: a key's state is removed
+  *    once nothing is buffered and either the accumulator equals its
+  *    initial value or the watermark has reached `expiresAt(acc)`. An
+  *    event-time timer fires at the earliest buffered event's deadline,
+  *    or at the expiry when nothing is buffered, so quiet keys still
+  *    flush and release state.
   */
 object StreamingMatchRecognize {
 
-  /** Buffered events are (tsMicros, id, satMask, nav, navS) quints —
-    * `nav`/`navS` carry the context predicates' TYPED column values
-    * (numeric / string slots of the same index space; empty when the
-    * clause has no navigation). `markIncl` distinguishes the
-    * SKIP TO FIRST/LAST (inclusive re-arm) mark from SKIP PAST LAST
-    * ROW (exclusive). */
-  case class MRState(evs: List[(Long, Long, Long, Array[Double], Array[String])],
-                     markTs: Long, markId: Long, hasMark: Boolean,
-                     markIncl: Boolean = false)
+  /** A buffered event: (tsMicros, id, satMask, nav, navS, measure
+    * values). `nav`/`navS` carry the context predicates' TYPED column
+    * values (numeric / string slots of the same index space; empty
+    * when the clause has no navigation); the measure values are empty
+    * for every door but [[measures]]. */
+  type Buffered = (Long, Long, Long, Array[Double], Array[String], Seq[Option[Double]])
 
-  case class MRMeasState(
-      evs: List[(Long, Long, Long, Seq[Option[Double]], Array[Double], Array[String])],
-      markTs: Long, markId: Long, hasMark: Boolean,
-      matchSeq: Long, idleSinceMicros: Long = 0L,
-      markIncl: Boolean = false)
+  /** A key's state: the buffered events, the skip mark and the door's
+    * accumulator. `markIncl` distinguishes the SKIP TO FIRST/LAST
+    * (inclusive re-arm) mark from SKIP PAST LAST ROW (exclusive). */
+  case class MRState[A](evs: List[Buffered], markTs: Long, markId: Long,
+                        hasMark: Boolean, markIncl: Boolean, acc: A)
 
   case class MeasuresEmit(key: Long, match_seq: Long,
                           values: Seq[Option[Double]],
                           classifier: String = null)
 
-  /** The clause door: compiles the MATCH_RECOGNIZE clause onto the
-    * strict row-pattern scan and runs it through [[runKeyedSteps]]. */
-  private def runKeyed[T: org.apache.spark.sql.Encoder](
+  /** A trigger's measure values per buffered (tsMicros, id). */
+  type MeasureValues = Map[(Long, Long), Seq[Option[Double]]]
+
+  private def definePreds(c: MatchRecognize.Compiled): Seq[(String, Column)] =
+    c.defines.map { case (n, body) => n -> expr(body) }
+
+  /** The match emitter of a door that emits no matches. */
+  private def noMatches[A, T]: (A, Long, PatternNFA.Matched, MeasureValues) => (A, Seq[T]) =
+    (a, _, _, _) => (a, Nil)
+
+  /** The match emitter of the [[PatternNFA.PMatch]] doors. */
+  private def matchRows[A]: (A, Long, PatternNFA.Matched, MeasureValues) => (A, Seq[PatternNFA.PMatch]) =
+    (a, key, m, _) => (a, Seq(m.row(key)))
+
+  /** The clause door without MEASURES: compiles the MATCH_RECOGNIZE
+    * clause onto the strict row-pattern scan and runs it through
+    * [[runKeyedSteps]] with a constant accumulator. */
+  private def runKeyed[T: Encoder](
       spark: SparkSession, events: DataFrame, clause: String,
       watermarkDelay: String, requireMsg: String, mode: PatternNFA.ScanMode)(
-      onMatch: (Long, PatternNFA.Matched, Long) => Seq[T] = PatternNFA.noRows,
+      onMatch: (Boolean, Long, PatternNFA.Matched, MeasureValues) => (Boolean, Seq[T]) =
+        noMatches[Boolean, T],
       onTimeout: (Long, PatternNFA.PTimeout, Long) => Seq[T] = PatternNFA.noRows)
       : Dataset[T] = {
     val c = MatchRecognize.compile(clause)
     require(c.measures.isEmpty, requireMsg)
-    runKeyedSteps(spark, events, c.steps,
-      c.defines.map { case (n, body) => n -> expr(body) },
-      c.withinMicros, c.afterMatch, c.navCols, c.ctx, watermarkDelay,
-      strict = true, mode)(onMatch, onTimeout)
+    runKeyedSteps(spark, events, c.steps, definePreds(c), c.withinMicros,
+      c.afterMatch, c.navCols, c.ctx, watermarkDelay, strict = true, mode,
+      init = false)(onMatch, onTimeout)
   }
 
-  /** SHARED state plumbing for every door but [[measures]] — bitmask
-    * projection, watermark column, buffer fold, eviction (== maturity)
-    * bound, flush-on-silence timer — around one
-    * [[PatternNFA.scanMature]] call per key and trigger. The doors
-    * differ only in the scan mode and the (onMatch, onTimeout)
-    * emitters, exactly like the batch doors, so the matches and both
-    * timeout outputs see the same offered anchors by construction.
-    * The API-pattern doors (the reference's `CEP.pattern(stream, …)` —
-    * PatternStream.java: the CEP library IS stream-first) feed the
-    * Pattern-algebra steps directly — the only route to streaming
-    * GROUP patterns and NO SKIP, which have no SQL clause form. */
-  private def runKeyedSteps[T: org.apache.spark.sql.Encoder](
+  /** The ONE keyed state path of every door: the scan projection plus
+    * the door's measure values, the watermark column, the buffer fold,
+    * eviction (== maturity) bound, the accumulator's eviction rule and
+    * the timer, around one [[PatternNFA.scanMature]] call per key and
+    * trigger. The doors differ only in the scan mode, the accumulator
+    * (`init`, `expiresAt`, threaded through `onMatch`) and the
+    * (onMatch, onTimeout) emitters, exactly like the batch doors, so
+    * the matches and both timeout outputs see the same offered anchors
+    * by construction. The API-pattern doors (the reference's
+    * `CEP.pattern(stream, …)` — PatternStream.java: the CEP library IS
+    * stream-first) feed the Pattern-algebra steps directly — the only
+    * route to streaming GROUP patterns and NO SKIP, which have no SQL
+    * clause form.
+    *
+    * `attachWatermark = false` is the cascade mode of [[measures]]:
+    * the caller provides the watermark-tagged `_et` column. */
+  private def runKeyedSteps[T: Encoder, A: TypeTag](
       spark: SparkSession, events: DataFrame, steps: Seq[PatternNFA.Step],
-      preds: Seq[(String, org.apache.spark.sql.Column)], withinMicros: Long,
+      preds: Seq[(String, Column)], withinMicros: Long,
       afterMatch: PatternNFA.AfterMatch, navCols: Seq[String],
       defCtx: Map[String, Seq[PatternNFA.CtxCmp]], watermarkDelay: String,
-      strict: Boolean = false,
-      mode: PatternNFA.ScanMode = PatternNFA.ScanMode.Matches)(
-      onMatch: (Long, PatternNFA.Matched, Long) => Seq[T] = PatternNFA.noRows,
+      strict: Boolean, mode: PatternNFA.ScanMode, init: A,
+      expiresAt: A => Long = (_: A) => Long.MaxValue,
+      measureCols: Seq[Column] = Nil, attachWatermark: Boolean = true)(
+      onMatch: (A, Long, PatternNFA.Matched, MeasureValues) => (A, Seq[T]) =
+        noMatches[A, T],
       onTimeout: (Long, PatternNFA.PTimeout, Long) => Seq[T] = PatternNFA.noRows)
       : Dataset[T] = {
     import spark.implicits._
-    require(preds.size <= 64, "at most 64 pattern variables")
-    val satCol = preds.zipWithIndex.map { case ((_, p), i) =>
-      when(p, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    // nav projections must mirror PatternNFA.prepare exactly (NaN/null
-    // = NULL; typed slots) — the streaming scan evaluates the same
-    // RCmp trees
-    val (navCol, navSCol) = PatternNFA.navProjections(navCols,
-      PatternNFA.navStringFlags(events, navCols))
     val pattern = PatternNFA.compileSteps(steps, preds.map(_._1), defCtx)
     val within = withinMicros
-
     // the watermark column must survive the projection — event-time
     // timeout requires the watermark node in the grouped plan
-    val ds = events
-      .withColumn("_et", timestamp_micros(col("tsMicros")))
-      .withWatermark("_et", watermarkDelay)
-      .select(col("key").cast("long"), col("tsMicros").cast("long"),
-        col("id").cast("long"), satCol.cast("long").as("_sat"),
-        navCol.as("_nav"), navSCol.as("_navS"), col("_et"))
-      .as[(Long, Long, Long, Long, Array[Double], Array[String], java.sql.Timestamp)]
+    val withEt =
+      if (attachWatermark) events
+        .withColumn("_et", timestamp_micros(col("tsMicros")))
+        .withWatermark("_et", watermarkDelay)
+      else {
+        // cascade mode: the caller provides a watermark-TAGGED _et
+        // (typically the upstream window's rowtime, future-shifted
+        // past the late filter — see the measures() doc); a second
+        // withWatermark node here would pin the min-policy global
+        // watermark at zero
+        require(events.columns.contains("_et"),
+          "attachWatermark = false needs a caller-provided " +
+            "watermark-tagged _et column (see measures() doc)")
+        events
+      }
+    val ds = withEt
+      .select(PatternNFA.scanColumns(events, preds, navCols) :+
+        array(measureCols: _*).cast("array<double>").as("_mv") :+ col("_et"): _*)
+      .as[(Long, Long, Long, Long, Array[Double], Array[String],
+           Seq[Option[Double]], java.sql.Timestamp)]
 
     ds.groupByKey(_._1).flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
       (key: Long,
-       rows: Iterator[(Long, Long, Long, Long, Array[Double], Array[String], java.sql.Timestamp)],
-       state: GroupState[MRState]) =>
-        val cur = state.getOption.getOrElse(MRState(Nil, 0L, 0L, hasMark = false))
+       rows: Iterator[(Long, Long, Long, Long, Array[Double], Array[String],
+                       Seq[Option[Double]], java.sql.Timestamp)],
+       state: GroupState[MRState[A]]) =>
+        val cur = state.getOption.getOrElse(
+          MRState(Nil, 0L, 0L, hasMark = false, markIncl = false, init))
         val buffered = rows.foldLeft(cur.evs) {
-          case (acc, (_, ts, id, sat, nav, navS, _)) => (ts, id, sat, nav, navS) :: acc
+          case (evs, (_, ts, id, sat, nav, navS, mv, _)) => (ts, id, sat, nav, navS, mv) :: evs
         }
         val wm = state.getCurrentWatermarkMs() * 1000L
         val mark0 = if (cur.hasMark)
           Some(PatternNFA.Mark(cur.markTs, cur.markId, cur.markIncl)) else None
-        val (emitted, mark) = PatternNFA.scanMature(key, buffered, pattern,
-          within, afterMatch, wm, mark0, strict, mode)(onMatch, onTimeout)
+        var acc = cur.acc
+        lazy val measureValues: MeasureValues =
+          buffered.map(e => (e._1, e._2) -> e._6).toMap
+        val (emitted, mark) = PatternNFA.scanMature(key,
+          buffered.map(e => (e._1, e._2, e._3, e._4, e._5)), pattern,
+          within, afterMatch, wm, mark0, strict, mode)(
+          onMatch = (k, m, _) => {
+            val (next, out) = onMatch(acc, k, m, measureValues)
+            acc = next
+            out
+          }, onTimeout)
         // eviction bound == maturity bound: kept events are exactly the
         // not-yet-mature suffix of the buffer
-        val kept = buffered.filter { case (ts, _, _, _, _) => ts + within > wm }
-        if (kept.isEmpty) {
+        val kept = buffered.filter(_._1 + within > wm)
+        val expiry = expiresAt(acc)
+        if (kept.isEmpty && (acc == init || wm >= expiry)) {
           if (state.exists) state.remove()
         } else {
           state.update(MRState(kept,
             mark.map(_.ts).getOrElse(0L), mark.map(_.id).getOrElse(0L),
-            mark.isDefined, mark.exists(_.inclusive)))
+            mark.isDefined, mark.exists(_.inclusive), acc))
           // flush-on-silence: fire when the earliest buffered event's
-          // window closes even if the key never sees traffic again
-          val nextDeadlineMs = (kept.map(_._1).min + within) / 1000L + 1
-          state.setTimeoutTimestamp(
-            nextDeadlineMs max (state.getCurrentWatermarkMs() + 1))
+          // window closes even if the key never sees traffic again, or
+          // at the accumulator's expiry once nothing is buffered
+          val next = if (kept.nonEmpty) kept.map(_._1).min + within else expiry
+          if (next != Long.MaxValue)
+            state.setTimeoutTimestamp(
+              (next / 1000L + 1) max (state.getCurrentWatermarkMs() + 1))
         }
         emitted.iterator
-    }
+    }(Encoders.product[MRState[A]], implicitly[Encoder[T]])
   }
 
   /** events: (key, tsMicros, id, kind, ...) — extra columns visible to
@@ -161,9 +201,9 @@ object StreamingMatchRecognize {
   def apply(spark: SparkSession, events: DataFrame, clause: String,
             watermarkDelay: String = "10 minutes"): Dataset[PatternNFA.PMatch] = {
     import spark.implicits._
-    runKeyed[PatternNFA.PMatch](spark, events, clause, watermarkDelay,
-      "MEASURES is batch-only (the reference restricts streaming MATCH_RECOGNIZE too)",
-      PatternNFA.ScanMode.Matches)(onMatch = (key, m, _) => Seq(m.row(key)))
+    runKeyed(spark, events, clause, watermarkDelay,
+      "clause has MEASURES: run it through StreamingMatchRecognize.measures",
+      PatternNFA.ScanMode.Matches)(onMatch = matchRows)
   }
 
   /** Streaming CEP via the PATTERN API (the reference's
@@ -177,9 +217,9 @@ object StreamingMatchRecognize {
               watermarkDelay: String = "10 minutes")
       : Dataset[PatternNFA.PMatch] = {
     import spark.implicits._
-    runKeyedSteps[PatternNFA.PMatch](spark, events, steps,
-      PatternNFA.kindPreds(steps), withinMicros, afterMatch, Nil, Map.empty,
-      watermarkDelay)(onMatch = (key, m, _) => Seq(m.row(key)))
+    runKeyedSteps(spark, events, steps, PatternNFA.kindPreds(steps),
+      withinMicros, afterMatch, Nil, Map.empty, watermarkDelay, strict = false,
+      PatternNFA.ScanMode.Matches, init = false)(onMatch = matchRows)
   }
 
   /** Timed-out partial matches on the unbounded stream — the
@@ -217,10 +257,10 @@ object StreamingMatchRecognize {
     // executor tasks on the first micro-batch; loop-first patterns
     // stay rejected by the shared scan guards
     PatternNFA.validateBranchShapes(steps)
-    runKeyedSteps[PatternNFA.PTimeoutB](spark, events, steps,
+    runKeyedSteps[PatternNFA.PTimeoutB, Boolean](spark, events, steps,
       PatternNFA.kindPreds(steps), withinMicros, PatternNFA.NoSkip, Nil,
-      Map.empty, watermarkDelay, mode = PatternNFA.ScanMode.Branches)(
-      onTimeout = PatternNFA.branchRow)
+      Map.empty, watermarkDelay, strict = false, PatternNFA.ScanMode.Branches,
+      init = false)(onTimeout = PatternNFA.branchRow)
   }
 
   /** Streaming MATCH_RECOGNIZE WITH MEASURES (ONE ROW PER MATCH) —
@@ -232,20 +272,28 @@ object StreamingMatchRecognize {
     * emission (no carried column needed) — this EXCEEDS the reference,
     * whose MatchCodeGenerator has no CLASSIFIER support at all.
     * Output: (key, one column per measure alias) — MATCH_NUMBER() is
-    * the per-key 1-based sequence of EMITTED matches, carried in state
-    * across micro-batches.
+    * the per-key 1-based sequence of EMITTED matches.
+    *
+    * This door runs on the one keyed state path ([[runKeyedSteps]]):
+    * every buffered event carries its measure values, and the per-match
+    * aggregates fold at maturity (no join-back is possible against an
+    * unbounded stream, so the carried values replace the batch path's
+    * equi-join). Its accumulator is (MATCH_NUMBER, the event time of the
+    * last match's last row), carried in state across micro-batches and
+    * restarts.
     *
     * Idle-state retention (`idleRetentionMicros`): once a key's event
     * buffer drains, the only state left is the residual MATCH_NUMBER
     * counter — without an eviction path that residue grows with the
     * number of distinct keys ever matched, unboundedly, on a high-churn
-    * stream. With retention set, the residue is evicted after the key
-    * stays idle (no events, no matches) for the given event-time span;
-    * a match arriving AFTER eviction restarts MATCH_NUMBER at 1 for
-    * that key — exactly the reference's idle-state-retention trade
-    * (Flink's table.exec.state.ttl resets accumulators the same way).
-    * `None` (default) keeps the reference's strict MATCH_NUMBER
-    * continuity at the cost of per-matched-key residual state.
+    * stream. With retention set, the accumulator expires at the last
+    * match's last row + within + retention: the residue is evicted once
+    * the buffer is empty and the watermark has reached that time. A
+    * match arriving AFTER eviction restarts MATCH_NUMBER at 1 for that
+    * key — exactly the reference's idle-state-retention trade (Flink's
+    * table.exec.state.ttl resets accumulators the same way). `None`
+    * (default) keeps the reference's strict MATCH_NUMBER continuity at
+    * the cost of per-matched-key residual state.
     *
     * `attachWatermark = false` skips the operator's own
     * `withWatermark` node: for a CASCADE input (a windowed aggregate
@@ -268,10 +316,6 @@ object StreamingMatchRecognize {
     require(c.measures.nonEmpty, "no MEASURES in clause — use apply()")
     require(!c.allRows, "streaming MATCH_RECOGNIZE is ONE ROW PER MATCH only " +
       "(the reference has the same restriction)")
-    val preds = c.defines.map { case (n, body) => n -> expr(body) }
-    val satCol = preds.zipWithIndex.map { case ((_, p), i) =>
-      when(p, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
     val measures = c.measures
     // measure columns may be EXPRESSIONS of event columns (the batch
     // path's SUM(B.price * B.rate) form) — resolve them with expr();
@@ -291,7 +335,6 @@ object StreamingMatchRecognize {
     }
     val within = c.withinMicros
     val steps = c.steps
-    val afterMatch = c.afterMatch
     // step indices each measure reads its bound events from (pattern
     // variables are unique in this grammar; a SUBSET variable reads
     // its members' bindings merged in sequence order)
@@ -300,165 +343,71 @@ object StreamingMatchRecognize {
         .map(_.varName).distinct
         .map(v => v -> c.membersOf(v).map(mv =>
           steps.indexWhere(_.kind == mv)).sorted).toMap
-
-    val navCols = c.navCols
-    val pattern = PatternNFA.compileSteps(steps, preds.map(_._1), c.ctx)
-    val (navCol, navSCol) = PatternNFA.navProjections(navCols,
-      PatternNFA.navStringFlags(events, navCols))
-    val withEt =
-      if (attachWatermark) events
-        .withColumn("_et", timestamp_micros(col("tsMicros")))
-        .withWatermark("_et", watermarkDelay)
-      else {
-        // cascade mode: the caller provides a watermark-TAGGED _et
-        // (typically the upstream window's rowtime, future-shifted
-        // past the late filter — see the method doc); a second
-        // withWatermark node here would pin the min-policy global
-        // watermark at zero
-        require(events.columns.contains("_et"),
-          "attachWatermark = false needs a caller-provided " +
-            "watermark-tagged _et column (see measures() doc)")
-        events
+    def round(v: Option[Double], m: MatchRecognize.Measure): Option[Double] =
+      (v, m.roundTo) match {
+        case (Some(x), Some(n)) => Some(BigDecimal(x)
+          .setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        case _ => v
       }
-    val ds = withEt
-      .select(col("key").cast("long"), col("tsMicros").cast("long"),
-        col("id").cast("long"), satCol.cast("long").as("_sat"),
-        array(mcols.map(n => expr(n).cast("double")): _*).as("_mv"),
-        navCol.as("_nav"), navSCol.as("_navS"), col("_et"))
-      .as[(Long, Long, Long, Long, Seq[Option[Double]], Array[Double],
-           Array[String], java.sql.Timestamp)]
-
-    val emitted = ds.groupByKey(_._1).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (key: Long,
-       rows: Iterator[(Long, Long, Long, Long, Seq[Option[Double]],
-                       Array[Double], Array[String], java.sql.Timestamp)],
-       state: GroupState[MRMeasState]) =>
-        val cur = state.getOption.getOrElse(
-          MRMeasState(Nil, 0L, 0L, hasMark = false, matchSeq = 0L))
-        var newRows = 0
-        val buffered = rows.foldLeft(cur.evs) {
-          case (acc, (_, ts, id, sat, mv, nav, navS, _)) =>
-            newRows += 1; (ts, id, sat, mv, nav, navS) :: acc
-        }
-        val wm = state.getCurrentWatermarkMs() * 1000L
-        val mark0 = if (cur.hasMark)
-          Some(PatternNFA.Mark(cur.markTs, cur.markId, cur.markIncl)) else None
-        val quads = buffered.map { case (ts, id, sat, _, nav, navS) =>
-          (ts, id, sat, nav, navS) }
-        val mvalsOf = buffered.map { case (ts, id, _, mv, _, _) =>
-          (ts, id) -> mv }.toMap
-        val (rawMatches, mark) = PatternNFA.scanMature(key, quads, pattern,
-          within, afterMatch, wm, mark0, strict = true)(
-          onMatch = (_, m, _) => Seq(m.pairs))
-        var seq = cur.matchSeq
-        def fold(m: MatchRecognize.Measure,
-                 bindings: Seq[Seq[(Long, Long)]]): Option[Double] = {
-          if (m.func == "MATCH_NUMBER") return Some(seq.toDouble)
-          if (m.func == "CLASSIFIER") return None // rides the string slot
-          if (m.func == "MATCH_ROWTIME") // last row's ts (exact < 2^53)
-            return Some(bindings.iterator.flatten.map(_._1).max.toDouble)
-          // unqualified measures aggregate over ALL rows of the match
-          // (steps bind in order, so flatten — and a SUBSET's
-          // ascending-step concatenation — preserves match order)
-          val bound = if (m.varName.isEmpty) bindings.flatten
-            else stepIdxsOf(m.varName).flatMap(bindings(_))
-          if (m.colName == "*") // COUNT(*): all rows, null-insensitive
-            return (Some(bound.size.toDouble), m.roundTo) match {
-              case (Some(v), Some(n)) => Some(BigDecimal(v)
-                .setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble)
-              case (r, _) => r
-            }
-          // opts keeps the null slots: FIRST/LAST must mirror the batch
-          // path's min_by/max_by(col, pos), which returns the (possibly
-          // null) value AT the boundary position — dropping Nones first
-          // would instead return the earliest/latest NON-NULL value and
-          // the two surfaces would diverge. The null-skipping `vals` is
-          // only for the SQL null-ignoring aggregates (SUM/AVG/MIN/MAX)
-          // and COUNT(col)'s non-null count.
-          val opts = bound.map(e => mvalsOf(e)(colIdx(m.colName)))
-          val vals = opts.flatten
-          val raw = m.func match {
-            case "COUNT" => Some(vals.size.toDouble)
-            // logical offsets ride the ordered bound list; out of
-            // range is NULL (mirrors the batch get() path)
-            case "FIRST" => opts.lift(m.off).flatten
-            case "LAST" => opts.lift(opts.size - 1 - m.off).flatten
-            case _ if vals.isEmpty => None
-            case "SUM" => Some(vals.sum)
-            case "AVG" => Some(vals.sum / vals.size)
-            case "MIN" => Some(vals.min)
-            case "MAX" => Some(vals.max)
-          }
-          (raw, m.roundTo) match {
-            case (Some(v), Some(n)) => Some(BigDecimal(v)
-              .setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble)
-            case _ => raw
-          }
-        }
-        val needClassifier = measures.exists(_.func == "CLASSIFIER")
-        val out = rawMatches.map { bindings =>
-          seq += 1
-          // CLASSIFIER() under ONE ROW PER MATCH (FINAL semantics) =
-          // the variable that bound the match's LAST row — mirrors the
-          // batch path's max_by(var_name, pos); steps bind sequential
-          // (ts, id)-ordered segments, so the max event across all
-          // bindings names it
-          val classifier = if (!needClassifier) null else {
-            var bestTs = Long.MinValue; var bestId = Long.MinValue
-            var bv: String = null
-            bindings.indices.foreach { i =>
-              bindings(i).foreach { case (ts, id) =>
-                if (ts > bestTs || (ts == bestTs && id > bestId)) {
-                  bestTs = ts; bestId = id; bv = steps(i).kind
-                }
-              }
-            }
-            bv
-          }
-          MeasuresEmit(key, seq, measures.map(m => fold(m, bindings)),
-            classifier)
-        }
-        val kept = buffered.filter { case (ts, _, _, _, _, _) => ts + within > wm }
-        val (mkTs, mkId, mkIncl) = (mark.map(_.ts).getOrElse(0L),
-          mark.map(_.id).getOrElse(0L), mark.exists(_.inclusive))
-        if (kept.isEmpty && seq == 0L) {
-          if (state.exists) state.remove()
-        } else if (kept.isEmpty) {
-          // residual state: only the MATCH_NUMBER counter (+skip mark)
-          // survives — a later match on this key continues the sequence
-          idleRetentionMicros match {
-            case None =>
-              // strict MATCH_NUMBER continuity: retained indefinitely
-              state.update(MRMeasState(Nil, mkTs, mkId,
-                mark.isDefined, seq, idleSinceMicros = 0L, mkIncl))
-            case Some(r) =>
-              // idleness starts when the buffer drains (any activity —
-              // new events, emitted matches, or a live buffer a moment
-              // ago — restarts the clock at the current watermark)
-              val active = newRows > 0 || out.nonEmpty ||
-                cur.evs.nonEmpty || cur.idleSinceMicros == 0L
-              val idleSince = if (active) wm else cur.idleSinceMicros
-              if (!active && wm >= idleSince + r) {
-                // retention elapsed: evict — MATCH_NUMBER restarts at 1
-                // if this key ever matches again (the documented delta)
-                state.remove()
-              } else {
-                state.update(MRMeasState(Nil, mkTs, mkId,
-                  mark.isDefined, seq, idleSince, mkIncl))
-                state.setTimeoutTimestamp(((idleSince + r) / 1000L + 1)
-                  max (state.getCurrentWatermarkMs() + 1))
-              }
-          }
-        } else {
-          state.update(MRMeasState(kept, mkTs, mkId,
-            mark.isDefined, seq, idleSinceMicros = 0L, mkIncl))
-          val nextDeadlineMs = (kept.map(_._1).min + within) / 1000L + 1
-          state.setTimeoutTimestamp(
-            nextDeadlineMs max (state.getCurrentWatermarkMs() + 1))
-        }
-        out.iterator
+    def fold(m: MatchRecognize.Measure, seq: Long,
+             bindings: Seq[Seq[(Long, Long)]], mv: MeasureValues): Option[Double] = {
+      if (m.func == "MATCH_NUMBER") return Some(seq.toDouble)
+      if (m.func == "CLASSIFIER") return None // rides the string slot
+      if (m.func == "MATCH_ROWTIME") // last row's ts (exact < 2^53)
+        return Some(bindings.iterator.flatten.map(_._1).max.toDouble)
+      // unqualified measures aggregate over ALL rows of the match
+      // (steps bind in order, so flatten — and a SUBSET's
+      // ascending-step concatenation — preserves match order)
+      val bound = if (m.varName.isEmpty) bindings.flatten
+        else stepIdxsOf(m.varName).flatMap(bindings(_))
+      // COUNT(*): all rows, null-insensitive
+      if (m.colName == "*") return round(Some(bound.size.toDouble), m)
+      // opts keeps the null slots: FIRST/LAST must mirror the batch
+      // path's min_by/max_by(col, pos), which returns the (possibly
+      // null) value AT the boundary position — dropping Nones first
+      // would instead return the earliest/latest NON-NULL value and
+      // the two surfaces would diverge. The null-skipping `vals` is
+      // only for the SQL null-ignoring aggregates (SUM/AVG/MIN/MAX)
+      // and COUNT(col)'s non-null count.
+      val opts = bound.map(e => mv(e)(colIdx(m.colName)))
+      val vals = opts.flatten
+      round(m.func match {
+        case "COUNT" => Some(vals.size.toDouble)
+        // logical offsets ride the ordered bound list; out of
+        // range is NULL (mirrors the batch get() path)
+        case "FIRST" => opts.lift(m.off).flatten
+        case "LAST" => opts.lift(opts.size - 1 - m.off).flatten
+        case _ if vals.isEmpty => None
+        case "SUM" => Some(vals.sum)
+        case "AVG" => Some(vals.sum / vals.size)
+        case "MIN" => Some(vals.min)
+        case "MAX" => Some(vals.max)
+      }, m)
     }
+    // CLASSIFIER() under ONE ROW PER MATCH (FINAL semantics) = the
+    // variable that bound the match's LAST row — mirrors the batch
+    // path's max_by(var_name, pos); steps bind sequential (ts, id)-
+    // ordered segments, so the max event across all bindings names it
+    val needClassifier = measures.exists(_.func == "CLASSIFIER")
+    def classifier(bindings: Seq[Seq[(Long, Long)]]): String =
+      if (!needClassifier) null
+      else steps(bindings.indices.filter(bindings(_).nonEmpty)
+        .maxBy(i => bindings(i).max)).kind
+
+    val emitted = runKeyedSteps(spark, events, steps, definePreds(c), within,
+        c.afterMatch, c.navCols, c.ctx, watermarkDelay, strict = true,
+        PatternNFA.ScanMode.Matches, init = (0L, Long.MinValue),
+        expiresAt = (a: (Long, Long)) =>
+          idleRetentionMicros.fold(Long.MaxValue)(a._2 + within + _),
+        measureCols = mcols.map(n => expr(n).cast("double")),
+        attachWatermark = attachWatermark)(
+      onMatch = { case ((seq0, _), key, m, mv) =>
+        val bindings = m.pairs
+        val seq = seq0 + 1
+        ((seq, bindings.iterator.flatten.map(_._1).max),
+          Seq(MeasuresEmit(key, seq, measures.map(fold(_, seq, bindings, mv)),
+            classifier(bindings))))
+      })
 
     // unpack the value array into named measure columns; integral-
     // sourced positional measures re-emit as longs (exact below 2^53)

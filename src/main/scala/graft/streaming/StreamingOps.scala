@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -361,64 +362,29 @@ object StreamingSemiAntiJoin {
 
 /** Streaming CEP "A followedBy B within T" (SURVEY.md §2.9 —
   * flink-cep NFA semantics for the relaxed-contiguity two-step
-  * pattern): pending A's wait in keyed state; B's are buffered until
-  * the watermark, then matched in event-time order; each A emits its
-  * earliest B; expired A's are dropped (state bounded by the window).
+  * pattern): each A emits its earliest B. Both kinds are released by
+  * [[WatermarkFold]] in (ts, id) order, so a B is judged once it is
+  * final (B.ts <= watermark). The accumulator is the key's released,
+  * still unmatched A's: an A is appended, a B matches every A of its
+  * window (A.ts < B.ts < A.ts + within), and either drops the A's whose
+  * window has closed by its time; the key expires `within` after its
+  * latest A, so state is bounded by the window.
   */
 object StreamingCEP {
-  case class State(as: List[(Long, Long)], bs: List[(Long, Long)])
-
   def apply(spark: SparkSession, events: Dataset[GEvent], aKind: String,
             bKind: String, withinMicros: Long,
             watermarkDelay: String = "10 minutes"): Dataset[CepEmit] = {
     import spark.implicits._
-    val tagged = events.filter(e => e.kind == aKind || e.kind == bKind)
-      .withColumn("ts", timestamp_micros(col("tsMicros")))
-      .withWatermark("ts", watermarkDelay)
-      .as[GEvent]
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        val cur = state.getOption.getOrElse(State(Nil, Nil))
-        var as = cur.as
-        var bs = cur.bs
-        rows.foreach { e =>
-          if (e.kind == aKind) as = (e.tsMicros, e.id) :: as
-          else bs = (e.tsMicros, e.id) :: bs
-        }
-        val wmMicros = state.getCurrentWatermarkMs() * 1000L
-        val (matureB, pendingB) = bs.partition(_._1 <= wmMicros)
-        var matchedAs = Set.empty[(Long, Long)]
-        val out = scala.collection.mutable.ListBuffer.empty[CepEmit]
-        matureB.sortBy(b => (b._1, b._2)).foreach { case (bts, bid) =>
-          as.filter { case (ats, _) =>
-            bts > ats && bts < ats + withinMicros
-          }.sortBy(a => (a._1, a._2)).foreach { a =>
-            if (!matchedAs(a)) {
-              matchedAs += a
-              out += CepEmit(key, a._2, a._1, bid, bts)
-            }
-          }
-        }
-        // drop matched A's and A's whose window fully expired
-        val keptA = as.filterNot(matchedAs)
-          .filter { case (ats, _) => ats + withinMicros > wmMicros }
-        if (keptA.isEmpty && pendingB.isEmpty) {
-          // key completed its lifecycle — free the entry rather than
-          // parking an empty record forever (idle-state hygiene).
-          if (state.exists) state.remove()
-        } else {
-          state.update(State(keptA, pendingB))
-          if (pendingB.nonEmpty)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-          else
-            // keptA dies at its window bound: fire then to clean up
-            // even if the key never sees traffic again.
-            state.setTimeoutTimestamp(
-              ((keptA.map(_._1).max + withinMicros) / 1000L + 1)
-                max (state.getCurrentWatermarkMs() + 1))
-        }
-        out.iterator
+    WatermarkFold(events.filter(e => e.kind == aKind || e.kind == bKind),
+        watermarkDelay, init = List.empty[(Long, Long)],
+        expiresAt = (as: List[(Long, Long)]) =>
+          as.lastOption.fold(Long.MinValue)(_._1 + withinMicros)) { (as, e) =>
+      val live = as.filter(_._1 + withinMicros > e.tsMicros)
+      if (e.kind == aKind) (live :+ (e.tsMicros -> e.id), Nil)
+      else {
+        val (hit, rest) = live.partition(_._1 < e.tsMicros)
+        (rest, hit.map { case (ats, aid) => CepEmit(e.key, aid, ats, e.id, e.tsMicros) })
+      }
     }
   }
 }
@@ -450,12 +416,7 @@ object StreamRunner {
       val d = java.nio.file.Paths.get(r,
         s"graft_ckpt_${ProcessHandle.current().pid()}")
       java.nio.file.Files.createDirectories(d)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(d.toFile)
-      }))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => FileUtils.deleteQuietly(d.toFile)))
       d
     }
   }
@@ -493,12 +454,7 @@ object StreamRunner {
       try q.processAllAvailable() finally q.stop()
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      scratch.foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(d.toFile)
-      }
+      scratch.foreach(d => FileUtils.deleteQuietly(d.toFile))
     }
     spark.table(name)
   }

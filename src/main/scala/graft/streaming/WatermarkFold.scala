@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - Release order: the final rows go through `step` in `order`,
   *    (tsMicros, id) by default; [[rightsFirst]] puts an "R"-kind row
   *    before the lefts of its timestamp. `step` threads the accumulator
-  *    and emits at most one row per released row.
+  *    and emits any number of rows per released row.
   *  - Timer: while rows are pending, an event-time timer at watermark
   *    + 1 ms releases them on the next micro-batch even if the key sees
   *    no more traffic; with none pending it is set at `expiresAt(acc)`,
@@ -48,7 +48,7 @@ private[streaming] object WatermarkFold {
       events: Dataset[GEvent], watermarkDelay: String, init: A,
       order: Ordering[GEvent] = byTsId,
       expiresAt: A => Long = (_: A) => Long.MaxValue)(
-      step: (A, GEvent) => (A, Option[O])): Dataset[O] = {
+      step: (A, GEvent) => (A, IterableOnce[O])): Dataset[O] = {
     import events.sparkSession.implicits._
     events
       .withColumn("ts", timestamp_micros(col("tsMicros")))

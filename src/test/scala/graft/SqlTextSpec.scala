@@ -782,6 +782,42 @@ class SqlTextSpec extends AnyFunSuite {
       .select("key", "anchor_id", "end_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(rows == Seq((1L, 1L, 2L)), s"streaming MR statement match: $rows")
+    // a MEASURES clause on a STREAMING view runs the streaming MEASURES
+    // operator: the statement's rows equal the library call's
+    val measuresClause =
+      """MATCH_RECOGNIZE (
+        |  PARTITION BY key ORDER BY tsMicros
+        |  MEASURES MATCH_NUMBER() AS mno, FIRST(A.id) AS a_id,
+        |           LAST(P.id) AS p_id, COUNT(*) AS n
+        |  ONE ROW PER MATCH
+        |  PATTERN (A P) WITHIN INTERVAL '1' HOUR
+        |  DEFINE A AS kind = 'signup', P AS kind = 'purchase')""".stripMargin
+    val mBatches = Seq(
+      Seq(StreamHarness.ev(1, 10, 1, kind = "signup"),
+        StreamHarness.ev(2, 15, 5, kind = "signup")),
+      Seq(StreamHarness.ev(1, 20, 2, kind = "purchase"),
+        StreamHarness.ev(1, 30, 3, kind = "signup")),
+      Seq(StreamHarness.ev(1, 40, 4, kind = "purchase"),
+        StreamHarness.ev(2, 50, 6, kind = "purchase")),
+      Seq(StreamHarness.ev(9, 10000, 99, kind = "x")))
+    val mInput = StreamHarness.mkStream()
+    mInput.toDS().toDF().createOrReplaceTempView("mr_sql_stream_m")
+    val viaSql = MatchRecognizeSql.sql(spark,
+      s"SELECT * FROM mr_sql_stream_m $measuresClause")
+    spark.catalog.dropTempView("mr_sql_stream_m_out")
+    val mq = viaSql.writeStream.outputMode(OutputMode.Append)
+      .format("memory").queryName("mr_sql_stream_m_out").start()
+    try {
+      mBatches.foreach { b => mInput.addData(b); mq.processAllAvailable() }
+      mq.processAllAvailable()
+    } finally mq.stop()
+    val sqlRows = spark.table("mr_sql_stream_m_out").collect().map(_.toString).sorted.toSeq
+    val apiRows = StreamHarness.run(mBatches, OutputMode.Append, "mr_sql_stream_m_api") {
+      ds => graft.streaming.StreamingMatchRecognize.measures(spark, ds.toDF(),
+        measuresClause)
+    }.collect().map(_.toString).sorted.toSeq
+    assert(sqlRows.size == 3, s"streaming MEASURES statement rows: $sqlRows")
+    assert(sqlRows == apiRows, s"statement=$sqlRows\nlibrary=$apiRows")
     // STREAMING views keep the one-integral-column requirement (the
     // incremental operator's keyed-state shape) and reject secondary
     // ORDER BY columns — both loud
