@@ -125,6 +125,7 @@ object StreamingMatchRecognize {
     import spark.implicits._
     val pattern = PatternNFA.compileSteps(steps, preds.map(_._1), defCtx)
     val within = withinMicros
+    val hasMeasures = measureCols.nonEmpty
     // the watermark column must survive the projection — event-time
     // timeout requires the watermark node in the grouped plan
     val withEt =
@@ -164,7 +165,8 @@ object StreamingMatchRecognize {
           Some(PatternNFA.Mark(cur.markTs, cur.markId, cur.markIncl)) else None
         var acc = cur.acc
         lazy val measureValues: MeasureValues =
-          buffered.map(e => (e._1, e._2) -> e._6).toMap
+          if (!hasMeasures) Map.empty
+          else buffered.map(e => (e._1, e._2) -> e._6).toMap
         val (emitted, mark) = PatternNFA.scanMature(key,
           buffered.map(e => (e._1, e._2, e._3, e._4, e._5)), pattern,
           within, afterMatch, wm, mark0, strict, mode)(
