@@ -9,9 +9,11 @@ import org.apache.spark.sql.types._
 
 /** Structured Streaming surface, executed as REAL streaming queries
   * inside the correctness gate: each query reads the events parquet
-  * through `readStream`, runs through watermarks / stateful operators /
-  * memory sink, and the collected output is oracle-checked against
-  * batch SQL (the bounded-input streaming result is deterministic).
+  * through `readStream`, runs through watermarks / stateful operators to
+  * `StreamRunner.toTable` (a foreachBatch sink that keeps each
+  * micro-batch's rows on the executors), and the collected output is
+  * oracle-checked against batch SQL (the bounded-input streaming result
+  * is deterministic).
   *
   * Watermark bookkeeping mirrored in the oracles: Spark's watermark is
   * floor(max event-time millis) − delay, so SQL computes

@@ -124,12 +124,16 @@ object StreamingLateFireWindow {
             fire("late")
           } else None
         }
-        // cleanup: spark-wm ≥ end ⇔ true-wm ≥ end + lateness
+        // cleanup: spark-wm ≥ end ⇔ true-wm ≥ end + lateness. A key with
+        // no live window is removed: Spark drops any later row for a
+        // cleaned window as older than its watermark.
         val dead = counts.keys.filter(_ + windowMicros <= sparkWm).toSet
-        state.update(WState(counts -- dead, lastFired -- dead,
-          fireSeqs -- dead, ontimeDone -- dead))
-        if ((counts.keySet -- dead).nonEmpty)
+        if ((counts.keySet -- dead).isEmpty) state.remove()
+        else {
+          state.update(WState(counts -- dead, lastFired -- dead,
+            fireSeqs -- dead, ontimeDone -- dead))
           state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
+        }
         out.iterator
     }
   }

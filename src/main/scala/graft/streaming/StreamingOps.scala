@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -389,9 +390,11 @@ object StreamingCEP {
   }
 }
 
-/** Run a (bounded) streaming query to a named in-memory sink and
-  * return the collected table — the MemoryStream/parquet harness used
-  * by both the specs and the oracle-checked st* queries. */
+/** Run a (bounded) streaming query to completion and return its output
+  * as a named table — the MemoryStream/parquet harness used by both the
+  * specs and the oracle-checked st* queries. Each micro-batch's output
+  * stays on the executors as locally checkpointed blocks until the
+  * caller collects it. */
 object StreamRunner {
   /** Scratch root for the BOUNDED drives' checkpoint trees (offset/
     * commit WALs, file-source log, state-store deltas). These drives
@@ -446,8 +449,19 @@ object StreamRunner {
     // and be cleaned the same way — this just picks the faster medium)
     val scratch = if (checkpointDir.isDefined) None
       else scratchRoot.map(r => java.nio.file.Files.createTempDirectory(r, name))
+    // Each batch is checkpointed into the block manager, so its rows
+    // never pass through the driver; Complete batches replace the kept
+    // ones, as the whole result table is re-emitted every trigger. The
+    // batch frame belongs to the query's cloned session, so only its
+    // plan is kept and is re-homed on `spark` below. `q.stop()` joins
+    // the query thread before `kept` is read.
+    val kept = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    val sink: (DataFrame, Long) => Unit = { (batch, _) =>
+      if (mode == OutputMode.Complete) kept.clear()
+      kept += batch.localCheckpoint(eager = true).queryExecution.analyzed
+    }
     try {
-      val w0 = df.writeStream.outputMode(mode).format("memory").queryName(name)
+      val w0 = df.writeStream.outputMode(mode).queryName(name).foreachBatch(sink)
       val w = checkpointDir.orElse(scratch.map(_.toString))
         .fold(w0)(d => w0.option("checkpointLocation", d))
       val q = start(spark, w)
@@ -456,6 +470,9 @@ object StreamRunner {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       scratch.foreach(d => FileUtils.deleteQuietly(d.toFile))
     }
+    kept.map(GraftSqlBridge.ofRows(spark, _)).reduceOption(_ union _)
+      .getOrElse(spark.createDataFrame(java.util.List.of[Row](), df.schema))
+      .createOrReplaceTempView(name)
     spark.table(name)
   }
 }

@@ -398,6 +398,32 @@ class StreamingOpsSpec extends AnyFunSuite {
       (300L, "early", 0, 1L)))
   }
 
+  test("late-fire window: a key whose last window is cleaned keeps no state") {
+    import graft.streaming.{StreamingLateFireWindow, WEvent}
+    val spark = StreamHarness.spark
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[WEvent]
+    val out = StreamingLateFireWindow(spark, input.toDS(),
+      windowMicros = 60000000L, watermarkDelayWithLateness = "70 seconds",
+      latenessMicros = 60000000L)
+    val q = out.toDF().writeStream.outputMode("append")
+      .format("noop").start()
+    def push(evs: WEvent*): Unit = { input.addData(evs); q.processAllAvailable() }
+    def we(key: String, tSec: Long, id: Long) = WEvent(key, tSec * 1000000L, id)
+    try {
+      push(we("a", 10, 1), we("b", 20, 2), we("a", 70, 3))
+      // spark-wm 930 s passes the ends of a's and b's windows; the row
+      // that moves it opens z's own window, so z is the one live key
+      push(we("z", 1000, 4))
+      q.processAllAvailable()
+    } finally q.stop()
+    val totals = q.recentProgress.toSeq
+      .flatMap(p => p.stateOperators.headOption.map(_.numRowsTotal))
+    assert(totals.max == 3, s"expected a, b and z live at the peak: $totals")
+    assert(totals.last == 1, s"cleaned keys kept state: $totals")
+  }
+
   test("temporal sort releases buffered rows in event-time order at the watermark") {
     import graft.streaming.StreamingTemporalSort
     val out = StreamHarness.run(
