@@ -137,8 +137,8 @@ object Streaming extends QueryGroup {
       import s.implicits._
       val emits = StreamingTopN(s, asGEvents(s, dir), n = 3)
       val table = StreamRunner.toTable(s, emits.toDF(), OutputMode.Update, "st4_out")
-      // re-alias one side: self-joining the memory-sink view reuses
-      // the same attribute ids and trips conflicting-reference checks.
+      // re-alias one side: self-joining the result view reuses the
+      // same attribute ids and trips conflicting-reference checks.
       val lastSeq = table.groupBy(col("key")).agg(max("emitSeq").as("emitSeq"))
         .select(col("key").as("_k"), col("emitSeq").as("_s"))
       table.join(lastSeq, col("key") === col("_k") && col("emitSeq") === col("_s"))

@@ -25,20 +25,21 @@ case class AsOfEmit(key: Long, leftId: Long, leftTsMicros: Long,
 case class CepEmit(key: Long, aId: Long, aTsMicros: Long, bId: Long, bTsMicros: Long)
 
 /** Streaming Top-N (SURVEY.md §2.6 — StreamExecRank's
-  * AppendOnlyTopNFunction.java:48 semantics): per-key sorted buffer in
-  * keyed state; emits a revised top-n snapshot whenever it changes.
-  * State is bounded at n entries per key by construction.
+  * AppendOnlyTopNFunction.java:48 semantics) on [[ArrivalFold]]: per-key
+  * sorted buffer in keyed state; emits a revised top-n snapshot at the
+  * end of each batch that changed it. State is bounded at n entries per
+  * key by construction. The top-n of the buffer and the batch under
+  * (−value, id) does not depend on the order the rows are taken in.
   */
 object StreamingTopN {
-  case class State(seq: Long, top: List[(Double, Long)])
-
   /** idleRetentionMicros bounds state by KEY liveness (the reference's
-    * ExecutionConfigOptions idle-state-retention): a key receiving no
-    * rows for the retention interval past the watermark is evicted via
-    * EventTimeTimeout — without it, per-key state is bounded at n rows
-    * but the key set itself grows without bound. Long.MaxValue (the
-    * default) keeps the original no-timeout behavior for feeds with
-    * fixed key cardinality.
+    * ExecutionConfigOptions idle-state-retention): a key whose latest
+    * row is older than the watermark by the retention interval is
+    * evicted via EventTimeTimeout — without it, per-key state is
+    * bounded at n rows but the key set itself grows without bound.
+    * Long.MaxValue (the default) keeps the original no-timeout behavior
+    * for feeds with fixed key cardinality, and imposes no watermark
+    * (st4 feeds an unwatermarked stream).
     *
     * `startRank` (r10 — the reference's RankRange,
     * runtime/operators/rank/AbstractTopNFunction rankStart/rankEnd:
@@ -53,51 +54,22 @@ object StreamingTopN {
     import spark.implicits._
     require(startRank >= 1 && startRank <= n,
       s"rank range start $startRank outside [1, $n]")
-    val ttl = idleRetentionMicros != Long.MaxValue
-    // EventTimeTimeout needs a watermarked input; the no-TTL path must
-    // not impose one (st4 feeds an unwatermarked stream).
-    val src = if (ttl)
-      ds.withColumn("ts", timestamp_micros(col("tsMicros")))
-        .withWatermark("ts", watermarkDelay).as[GEvent]
-    else ds
-    val timeoutConf =
-      if (ttl) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout
-    src.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Update, timeoutConf) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        if (ttl && state.hasTimedOut) {
-          state.remove() // idle past retention: drop the key's buffer
-          Iterator.empty
-        } else {
-          val cur = state.getOption.getOrElse(State(0L, Nil))
-          var top = cur.top
-          var lastActivityMicros = Long.MinValue
-          rows.foreach { r =>
-            lastActivityMicros = lastActivityMicros max r.tsMicros
-            top = ((r.value, r.id) :: top)
-              .sortBy { case (v, id) => (-v, id) }.take(n)
-          }
-          val bufChanged = top != cur.top
-          // a revision is a change of the EMITTED slice; the buffer
-          // below startRank must still persist (it defines
-          // displacement into the range)
-          val sliceChanged =
-            top.drop(startRank - 1) != cur.top.drop(startRank - 1)
-          val ns = State(if (sliceChanged) cur.seq + 1 else cur.seq, top)
-          if (bufChanged) state.update(ns)
-          if (ttl && state.exists) {
-            // evict when the watermark passes last activity + retention
-            // (must stay above the current watermark to be settable)
-            val fireMs = (lastActivityMicros / 1000L) + (idleRetentionMicros / 1000L)
-            state.setTimeoutTimestamp(fireMs max (state.getCurrentWatermarkMs() + 1))
-          }
-          if (sliceChanged)
-            top.zipWithIndex.iterator.drop(startRank - 1)
-              .map { case ((v, id), i) =>
-                TopNEmit(key, i + 1, id, v, ns.seq)
-              }
-          else Iterator.empty
-        }
+    // accumulator: (emitSeq, the top-n (value, id) buffer, latest ts)
+    type Acc = (Long, List[(Double, Long)], Long)
+    def slice(a: Acc) = a._2.drop(startRank - 1)
+    val idle = Option.when(idleRetentionMicros != Long.MaxValue)(watermarkDelay ->
+      ((a: Acc) => WatermarkFold.expiry(a._3, idleRetentionMicros)))
+    val revise = (key: Long, was: Acc, now: Acc) =>
+      if (slice(now) == slice(was)) (now, Nil)
+      else {
+        val seq = now._1 + 1
+        (now.copy(_1 = seq), slice(now).zipWithIndex.map { case ((v, id), i) =>
+          TopNEmit(key, startRank + i, id, v, seq) })
+      }
+    ArrivalFold(ds, _.key, OutputMode.Update, init = (0L, List.empty[(Double, Long)],
+        Long.MinValue), idle, revise) { case ((seq, top, last), e) =>
+      ((seq, ((e.value, e.id) :: top).sortBy { case (v, id) => (-v, id) }.take(n),
+        last max e.tsMicros), Nil)
     }
   }
 }
@@ -136,13 +108,6 @@ case class DedupEmit(key: Long, kind: String, id: Long, tsMicros: Long,
 object StreamingDedupKeepFirst {
   case class State(ts: Long, id: Long, value: Double, emitted: Boolean)
 
-  /** `ts + retention` saturating at Long.MaxValue: a large finite
-    * retention near the sentinel must mean "practically never", not
-    * wrap negative and evict the tombstone immediately. */
-  private def matureAt(ts: Long, retentionMicros: Long): Long =
-    if (retentionMicros > Long.MaxValue - ts) Long.MaxValue
-    else ts + retentionMicros
-
   def apply(spark: SparkSession, ds: Dataset[GEvent], byKind: Boolean,
             watermarkDelay: String = "1 minute",
             idleRetentionMicros: Long = Long.MaxValue): Dataset[DedupEmit] = {
@@ -162,7 +127,7 @@ object StreamingDedupKeepFirst {
           rows.foreach(_ => ())
           if (idleRetentionMicros != Long.MaxValue) {
             val s = cur.get
-            val evictAt = matureAt(s.ts, idleRetentionMicros)
+            val evictAt = WatermarkFold.expiry(s.ts, idleRetentionMicros)
             if (wm >= evictAt) state.remove()
             else state.setTimeoutTimestamp(
               (evictAt / 1000L + 1)
@@ -182,7 +147,7 @@ object StreamingDedupKeepFirst {
               state.update(State(ts, id, v, emitted = true))
               if (idleRetentionMicros != Long.MaxValue)
                 state.setTimeoutTimestamp(
-                  (matureAt(ts, idleRetentionMicros) / 1000L + 1)
+                  (WatermarkFold.expiry(ts, idleRetentionMicros) / 1000L + 1)
                     max (state.getCurrentWatermarkMs() + 1))
               Iterator.single(DedupEmit(gk._1, gk._2, id, ts, v))
             case Some((ts, id, v)) =>
@@ -206,40 +171,33 @@ case class DedupLastEmit(key: Long, kind: String, id: Long, tsMicros: Long,
                          value: Double, emitSeq: Long)
 
 /** Streaming keep-LAST deduplication (SURVEY.md §2.6 — the
-  * reference's `DeduplicateKeepLastRowFunction.java:34`): state holds
-  * only the (tsMicros, id)-maximal row per group; a newer arrival
-  * replaces it and emits a new revision immediately (no watermark
-  * wait — keep-last is an update stream, exactly the reference's
-  * semantics). Within a micro-batch only the newest row emits (the
-  * reference's minibatch dedup). The changelog folds deterministically:
-  * max(emitSeq) per group is the event-time-maximal row regardless of
-  * arrival order. State: one row per group, bounded by group count.
+  * reference's `DeduplicateKeepLastRowFunction.java:34`) on
+  * [[ArrivalFold]]: state holds only the (tsMicros, id)-maximal row per
+  * group; a newer arrival replaces it and emits a new revision
+  * immediately (no watermark wait — keep-last is an update stream,
+  * exactly the reference's semantics). Within a micro-batch only the
+  * newest row emits (the reference's minibatch dedup). The changelog
+  * folds deterministically: max(emitSeq) per group is the
+  * event-time-maximal row regardless of arrival order. State: one row
+  * per group, bounded by group count.
   */
 object StreamingDedupKeepLast {
-  case class State(ts: Long, id: Long, value: Double, seq: Long)
-
   def apply(spark: SparkSession, ds: Dataset[GEvent],
             byKind: Boolean): Dataset[DedupLastEmit] = {
     import spark.implicits._
-    ds.groupByKey(e => (e.key, if (byKind) e.kind else ""))
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-      (gk: (Long, String), rows: Iterator[GEvent], state: GroupState[State]) =>
-        val cur = state.getOption
-        var best = cur.map(s => (s.ts, s.id, s.value))
-        rows.foreach { e =>
-          val newer = best.forall(b =>
-            e.tsMicros > b._1 || (e.tsMicros == b._1 && e.id > b._2))
-          if (newer) best = Some((e.tsMicros, e.id, e.value))
-        }
-        best match {
-          case Some((ts, id, v))
-              if cur.forall(s => ts != s.ts || id != s.id) =>
-            val seq = cur.map(_.seq).getOrElse(0L) + 1
-            state.update(State(ts, id, v, seq))
-            Iterator.single(DedupLastEmit(gk._1, gk._2, id, ts, v, seq))
-          case _ => Iterator.empty
-        }
+    // accumulator: (the latest (ts, id, value), emitSeq)
+    type Acc = (Option[(Long, Long, Double)], Long)
+    val revise = (gk: (Long, String), was: Acc, now: Acc) => now match {
+      case (Some((ts, id, v)), seq) if now._1 != was._1 =>
+        ((now._1, seq + 1), Some(DedupLastEmit(gk._1, gk._2, id, ts, v, seq + 1)))
+      case _ => (now, None)
+    }
+    ArrivalFold(ds, e => (e.key, if (byKind) e.kind else ""), OutputMode.Update,
+        init = (Option.empty[(Long, Long, Double)], 0L), batchEnd = revise) {
+      case ((best, seq), e) =>
+        val newer = best.forall { case (ts, id, _) =>
+          e.tsMicros > ts || (e.tsMicros == ts && e.id > id) }
+        (if (newer) (Some((e.tsMicros, e.id, e.value)), seq) else (best, seq), Nil)
     }
   }
 }
@@ -296,8 +254,8 @@ object StreamingAsOfJoin {
   * no history, unlike the rowtime variant's buffered versions); each
   * arriving left row joins the version current AT ARRIVAL and emits
   * immediately — no watermark wait. This is the common streaming
-  * dim-enrichment shape: state is one row per key, bounded by key
-  * cardinality, not by time.
+  * dim-enrichment shape: state is one row per key that has seen a
+  * right ([[ArrivalFold]]), bounded by key cardinality, not by time.
   *
   * Arrival order within a micro-batch is made deterministic by
   * processing rows in (tsMicros, id) order, so on an in-order feed
@@ -305,26 +263,18 @@ object StreamingAsOfJoin {
   * pure arrival order, exactly like the reference's proctime join.
   */
 object StreamingProcTimeTemporalJoin {
-  case class Version(tsMicros: Long, id: Long)
-
   def apply(spark: SparkSession, left: Dataset[GEvent],
             right: Dataset[GEvent]): Dataset[AsOfEmit] = {
     import spark.implicits._
     val tagged = left.map(_.copy(kind = "L")).union(right.map(_.copy(kind = "R")))
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[Version]) =>
-        var cur = state.getOption
-        val out = scala.collection.mutable.ListBuffer.empty[AsOfEmit]
-        rows.toSeq.sortBy(e => (e.tsMicros, e.id)).foreach { e =>
-          if (e.kind == "R") cur = Some(Version(e.tsMicros, e.id))
-          else out += (cur match {
-            case Some(v) => AsOfEmit(key, e.id, e.tsMicros, v.id, v.tsMicros, matched = true)
-            case None    => AsOfEmit(key, e.id, e.tsMicros, -1L, -1L, matched = false)
-          })
-        }
-        cur.foreach(state.update)
-        out.iterator
+    // accumulator: the latest right (ts, id); a key with none keeps no state
+    ArrivalFold(tagged, _.key, OutputMode.Append, init = Option.empty[(Long, Long)]) {
+      (latest, e) =>
+        if (e.kind == "R") (Some((e.tsMicros, e.id)), None)
+        else (latest, Some(latest match {
+          case Some((rts, rid)) => AsOfEmit(e.key, e.id, e.tsMicros, rid, rts, matched = true)
+          case None => AsOfEmit(e.key, e.id, e.tsMicros, -1L, -1L, matched = false)
+        }))
     }
   }
 }

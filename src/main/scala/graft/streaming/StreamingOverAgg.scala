@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 case class OverEmit(key: Long, id: Long, tsMicros: Long, frameSum: BigDecimal, nInFrame: Int)
 
@@ -116,14 +116,18 @@ object StreamingLeftOuterJoin {
   *
   * `idleRetentionMicros` is the reference's IDLE_STATE_RETENTION
   * trade, parity with the LEFT OUTER sibling: rows older than the
-  * key's max event time minus the retention are evicted after each
-  * batch (evicted unmatched rows keep their pad), so both buffers are
-  * bounded by the retention span instead of growing with the stream.
+  * key's max event time minus the retention are evicted at the end of
+  * each batch (evicted unmatched rows keep their pad), so both buffers
+  * are bounded by the retention span instead of growing with the
+  * stream. The prune runs at batch end, not per row: a later row of
+  * the same batch still matches a row below the floor. As in
+  * [[StreamingSymmetricJoin]], the span is measured from the key's own
+  * latest row and no timer is set, so a key that goes idle keeps its
+  * buffers.
   */
 object StreamingFullOuterJoin {
   /** Both sides' buffered (ts, id, matched) rows. */
-  case class State(lefts: List[(Long, Long, Boolean)],
-                   rights: List[(Long, Long, Boolean)])
+  private type Sides = (List[(Long, Long, Boolean)], List[(Long, Long, Boolean)])
 
   def apply(spark: SparkSession, left: Dataset[GEvent],
             right: Dataset[GEvent],
@@ -131,9 +135,10 @@ object StreamingFullOuterJoin {
     fold(spark, left, right, idleRetentionMicros, rightPads = true,
       updateBefore = false)
 
-  /** The outer-join changelog fold. Lefts are always padded; rights
-    * only with `rightPads`. `updateBefore` replaces a left pad with the
-    * -U/+U pair instead of -D/+I (right pads always retract as -D). */
+  /** The outer-join changelog fold on [[ArrivalFold]], over [[Sides]].
+    * Lefts are always padded; rights only with `rightPads`.
+    * `updateBefore` replaces a left pad with the -U/+U pair instead of
+    * -D/+I (right pads always retract as -D). */
   private[streaming] def fold(spark: SparkSession, left: Dataset[GEvent],
                               right: Dataset[GEvent], idleRetentionMicros: Long,
                               rightPads: Boolean,
@@ -141,96 +146,66 @@ object StreamingFullOuterJoin {
     import spark.implicits._
     val (leftDel, leftAdd) = if (updateBefore) ("-U", "+U") else ("-D", "+I")
     val tagged = left.map(_.copy(kind = "L")).union(right.map(_.copy(kind = "R")))
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        var st = state.getOption.getOrElse(State(Nil, Nil))
-        val out = scala.collection.mutable.ListBuffer.empty[OuterJoinEmit]
-        var maxTs = (st.lefts.map(_._1) ++ st.rights.map(_._1))
-          .foldLeft(Long.MinValue)(_ max _)
-        rows.toSeq.sortBy(e => (e.tsMicros, e.id)).foreach { e =>
-          maxTs = maxTs max e.tsMicros
-          val isLeft = e.kind == "L"
-          def row(other: Long, kind: String) =
-            if (isLeft) OuterJoinEmit(key, e.id, other, kind)
-            else OuterJoinEmit(key, other, e.id, kind)
-          val others = if (isLeft) st.rights else st.lefts
-          if (others.isEmpty && (isLeft || rightPads)) out += row(-1L, "+I")
-          // an unmatched padded row's first match retracts its pad
-          others.foreach { case (_, o, matched) =>
-            val padded = !matched && (!isLeft || rightPads)
-            if (padded) out += (if (isLeft) OuterJoinEmit(key, -1L, o, "-D")
-              else OuterJoinEmit(key, o, -1L, leftDel))
-            out += row(o, if (padded && !isLeft) leftAdd else "+I")
-          }
-          val mine = (e.tsMicros, e.id, others.nonEmpty)
-          val seen = others.map { case (ts, o, _) => (ts, o, true) }
-          st = if (isLeft) State(mine :: st.lefts, seen) else State(seen, mine :: st.rights)
-        }
-        if (idleRetentionMicros != Long.MaxValue) {
-          val floor = maxTs - idleRetentionMicros
-          st = State(st.lefts.filter(_._1 >= floor),
-            st.rights.filter(_._1 >= floor))
-        }
-        if (st.lefts.isEmpty && st.rights.isEmpty) {
-          if (state.exists) state.remove()
-        } else state.update(st)
-        out.iterator
+    val prune = (_: Long, _: Sides, now: Sides) =>
+      if (idleRetentionMicros == Long.MaxValue) (now, Nil)
+      else {
+        val floor = (now._1 ++ now._2).map(_._1).max - idleRetentionMicros
+        ((now._1.filter(_._1 >= floor), now._2.filter(_._1 >= floor)), Nil)
+      }
+    ArrivalFold[Long, Sides, OuterJoinEmit](tagged, _.key, OutputMode.Append,
+        init = (Nil, Nil), batchEnd = prune) { case ((lefts, rights), e) =>
+      val isLeft = e.kind == "L"
+      def row(other: Long, kind: String) =
+        if (isLeft) OuterJoinEmit(e.key, e.id, other, kind)
+        else OuterJoinEmit(e.key, other, e.id, kind)
+      val others = if (isLeft) rights else lefts
+      val pad = if (others.isEmpty && (isLeft || rightPads)) List(row(-1L, "+I")) else Nil
+      // an unmatched padded row's first match retracts its pad
+      val matches = others.flatMap { case (_, o, matched) =>
+        val padded = !matched && (!isLeft || rightPads)
+        val retract =
+          if (!padded) Nil
+          else if (isLeft) List(OuterJoinEmit(e.key, -1L, o, "-D"))
+          else List(OuterJoinEmit(e.key, o, -1L, leftDel))
+        retract :+ row(o, if (padded && !isLeft) leftAdd else "+I")
+      }
+      val mine = (e.tsMicros, e.id, others.nonEmpty)
+      val seen = others.map { case (ts, o, _) => (ts, o, true) }
+      (if (isLeft) (mine :: lefts, seen) else (seen, mine :: rights), pad ++ matches)
     }
   }
 }
 
 /** Unbounded stream-stream equi-join (SURVEY.md §2.3 —
   * StreamingJoinOperator.java:36 semantics, inner variant): symmetric
-  * hash in keyed state. Each arriving row joins the full buffered
-  * opposite side and is then buffered itself — no watermark bound on
-  * matching (that is the point: Spark's native stream-stream join
-  * requires a time bound; the reference's does not).
+  * hash in keyed state on [[ArrivalFold]]. Each arriving row joins the
+  * buffered opposite side and is then buffered itself — no watermark
+  * bound on matching (that is the point: Spark's native stream-stream
+  * join requires a time bound; the reference's does not).
   *
-  * State grows with the inputs; production deployments bound it with
-  * idle-state retention (the reference's
-  * ExecutionConfigOptions#IDLE_STATE_RETENTION) — a TTL sweep on
-  * tsMicros can be added to the state update without changing the
-  * emission logic.
+  * `idleRetentionMicros` is the reference's IDLE_STATE_RETENTION knob:
+  * rows older than the key's max event time minus the retention are
+  * dropped before each row matches, so both buffers are bounded by the
+  * retention span; Long.MaxValue (the default) keeps every row. The
+  * span is measured from the key's own latest row and no timer is set,
+  * so a key that goes idle keeps its buffers.
   */
 object StreamingSymmetricJoin {
-  case class State(lefts: List[(Long, Long)], rights: List[(Long, Long)])
-
-  /** idleRetentionMicros: rows older than (max event time seen in the
-    * key's state − retention) are evicted before matching — the
-    * reference's IDLE_STATE_RETENTION knob; Long.MaxValue = keep all. */
   def apply(spark: SparkSession, left: Dataset[GEvent], right: Dataset[GEvent],
             idleRetentionMicros: Long = Long.MaxValue): Dataset[JoinEmit] = {
     import spark.implicits._
     val tagged = left.map(_.copy(kind = "L")).union(right.map(_.copy(kind = "R")))
-    tagged.groupByKey(_.key).flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-      (key: Long, rows: Iterator[GEvent], state: GroupState[State]) =>
-        var st = state.getOption.getOrElse(State(Nil, Nil))
-        val out = scala.collection.mutable.ListBuffer.empty[JoinEmit]
-        var maxTs = (st.lefts ++ st.rights).map(_._1).foldLeft(Long.MinValue)(_ max _)
-        // process in deterministic order within the batch
-        rows.toSeq.sortBy(e => (e.tsMicros, e.id)).foreach { e =>
-          maxTs = maxTs max e.tsMicros
-          val floor = if (idleRetentionMicros == Long.MaxValue) Long.MinValue
-                      else maxTs - idleRetentionMicros
-          if (e.kind == "L") {
-            st.rights.foreach { case (ts, r) =>
-              if (ts >= floor) out += JoinEmit(key, e.id, r) }
-            st = st.copy(lefts = (e.tsMicros, e.id) :: st.lefts)
-          } else {
-            st.lefts.foreach { case (ts, l) =>
-              if (ts >= floor) out += JoinEmit(key, l, e.id) }
-            st = st.copy(rights = (e.tsMicros, e.id) :: st.rights)
-          }
-        }
-        // evict dead state so it stays bounded under retention
-        if (idleRetentionMicros != Long.MaxValue) {
-          val floor = maxTs - idleRetentionMicros
-          st = State(st.lefts.filter(_._1 >= floor), st.rights.filter(_._1 >= floor))
-        }
-        state.update(st)
-        out.iterator
+    // accumulator: the buffered (ts, id) lefts and rights, and the key's max ts
+    val init = (List.empty[(Long, Long)], List.empty[(Long, Long)], Long.MinValue)
+    ArrivalFold(tagged, _.key, OutputMode.Append, init) { case ((lefts, rights, maxTs), e) =>
+      val top = maxTs max e.tsMicros
+      val live: List[(Long, Long)] => List[(Long, Long)] =
+        if (idleRetentionMicros == Long.MaxValue) identity
+        else _.filter(_._1 >= top - idleRetentionMicros)
+      val (ls, rs) = (live(lefts), live(rights))
+      val me = (e.tsMicros, e.id)
+      if (e.kind == "L") ((live(me :: ls), rs, top), rs.map(r => JoinEmit(e.key, e.id, r._2)))
+      else ((ls, live(me :: rs), top), ls.map(l => JoinEmit(e.key, l._2, e.id)))
     }
   }
 }

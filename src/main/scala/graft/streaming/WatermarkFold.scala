@@ -44,6 +44,13 @@ private[streaming] object WatermarkFold {
     * event time as a left is visible to it. */
   val rightsFirst: Ordering[GEvent] = Ordering.by(e => (e.tsMicros, e.kind != "R", e.id))
 
+  /** `ts + retention` saturating at Long.MaxValue: a large finite
+    * retention near the sentinel must mean "practically never", not
+    * wrap negative and evict the key's state immediately. */
+  def expiry(ts: Long, retentionMicros: Long): Long =
+    if (retentionMicros > Long.MaxValue - ts) Long.MaxValue
+    else ts + retentionMicros
+
   def apply[A: TypeTag, O <: Product : TypeTag](
       events: Dataset[GEvent], watermarkDelay: String, init: A,
       order: Ordering[GEvent] = byTsId,

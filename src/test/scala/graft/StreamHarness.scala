@@ -51,14 +51,14 @@ object StreamHarness {
     spark.table(name)
   }
 
-  /** [[run]] in Append mode with a stop and a restart between batches:
-    * each batch runs in a query of its own, started from one shared
-    * checkpoint directory, so every batch after the first restores the
-    * operator's state and the watermark from that checkpoint. Rows are
-    * collected per batch id through foreachBatch (the memory sink
-    * cannot resume in Append mode), so a batch that a restart replays
-    * replaces the rows of its first run. */
-  def runRestarting(batches: Seq[Seq[GEvent]])
+  /** [[run]] with a stop and a restart between batches: each batch
+    * runs in a query of its own, started from one shared checkpoint
+    * directory, so every batch after the first restores the operator's
+    * state and the watermark from that checkpoint. Rows are collected
+    * per batch id through foreachBatch (the memory sink cannot resume
+    * in Append mode), so a batch that a restart replays replaces the
+    * rows of its first run. */
+  def runRestarting(batches: Seq[Seq[GEvent]], mode: OutputMode)
                    (build: Dataset[GEvent] => DataFrame): Seq[Row] = {
     val input = mkStream()
     val out = build(input.toDS())
@@ -66,7 +66,7 @@ object StreamHarness {
     val byBatch = scala.collection.concurrent.TrieMap.empty[Long, Array[Row]]
     val sink: (DataFrame, Long) => Unit = (b, id) => byBatch(id) = b.collect()
     try batches.zipWithIndex.foreach { case (b, i) =>
-      val q = out.writeStream.outputMode(OutputMode.Append)
+      val q = out.writeStream.outputMode(mode)
         .option("checkpointLocation", dir.toString).foreachBatch(sink).start()
       try {
         input.addData(b)

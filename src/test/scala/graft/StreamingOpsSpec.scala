@@ -106,6 +106,30 @@ class StreamingOpsSpec extends AnyFunSuite {
     assert(got == Map(10L -> 1L, 11L -> 2L, 12L -> 2L, 13L -> -1L))
   }
 
+  test("StreamingProcTimeTemporalJoin keeps a state row only for keys that have seen a right") {
+    // a key with only lefts has no version to keep: it stores nothing,
+    // however many lefts it joins unmatched
+    val input = StreamHarness.mkStream()
+    val ds = input.toDS()
+    val out = StreamingProcTimeTemporalJoin(spark,
+      left = ds.filter(col("kind") === "L").as[GEvent](spark.implicits.newProductEncoder),
+      right = ds.filter(col("kind") === "R").as[GEvent](spark.implicits.newProductEncoder))
+    spark.catalog.dropTempView("proctime_state_spec")
+    val q = out.toDF().writeStream.outputMode(OutputMode.Append)
+      .format("memory").queryName("proctime_state_spec").start()
+    def stateRows(evs: GEvent*): Long = {
+      input.addData(evs); q.processAllAvailable()
+      q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    }
+    try {
+      assert(stateRows(ev(1, 10, 1, kind = "R"), ev(1, 11, 10, kind = "L"),
+        ev(2, 12, 11, kind = "L"), ev(3, 13, 12, kind = "L")) == 1L)
+      assert(stateRows(ev(2, 20, 13, kind = "L"), ev(4, 21, 14, kind = "L")) == 1L)
+      assert(stateRows(ev(2, 30, 2, kind = "R")) == 2L)
+    } finally q.stop()
+    assert(spark.table("proctime_state_spec").count() == 5)
+  }
+
   test("StreamingCEP emits earliest B per A within the window") {
     val batches = Seq(
       Seq(ev(1, 100, 1, kind = "A"), ev(1, 110, 2, kind = "B"),

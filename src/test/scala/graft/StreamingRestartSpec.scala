@@ -9,13 +9,16 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Batching and restart invariance of the event-time operators that
-  * release a key's rows in watermark order and of the streaming CEP
+  * release a key's rows in watermark order, of the streaming CEP
   * operators (MATCH_RECOGNIZE with and without MEASURES, and the
-  * two-step `StreamingCEP`): the same input fed as one
-  * micro-batch, as micro-batches of three events, and as micro-batches
-  * of three with the query stopped and restarted from its checkpoint
-  * between batches must emit the same rows. Inputs are small seeded
-  * keyed sequences with tied timestamps and ids not in arrival order,
+  * two-step `StreamingCEP`) and of the arrival-ordered operators (the
+  * symmetric, outer and proc-time joins, TopN and keep-last dedup):
+  * the same input fed as one micro-batch, as micro-batches of three
+  * events, and as micro-batches of three with the query stopped and
+  * restarted from its checkpoint between batches must emit the same
+  * rows, or, where the operator's raw changelog rightly depends on
+  * batching, fold to the same result. Inputs are small seeded keyed
+  * sequences with tied timestamps and ids not in arrival order,
   * arriving out of event-time order by less than the watermark delay
   * (so no event is late), and closed by a flush event far past every
   * other event.
@@ -89,7 +92,64 @@ class StreamingRestartSpec extends AnyFunSuite {
     "cep" -> (ds => StreamingCEP(spark, ds, aKind = "L", bKind = "R",
       withinMicros = 5000000L, delay).toDF()))
 
+  /** The arrival-ordered operators, each with the part of its output
+    * that its contract fixes under any batching: the symmetric join
+    * emits each pair exactly once, so its raw rows; the outer joins emit
+    * a pad and its retraction in one batch or across two, so their net
+    * changelog; TopN and keep-last emit one revision per batch, so the
+    * rows of each group's latest revision. */
+  private val arrivalOperators: Seq[(String, OutputMode, Dataset[GEvent] => DataFrame,
+      Seq[Row] => Seq[String])] = Seq(
+    ("symmetric_join", OutputMode.Append, ds =>
+      StreamingSymmetricJoin(spark, side(ds, "L"), side(ds, "R")).toDF(), sorted(_)),
+    ("full_outer_join", OutputMode.Append, ds =>
+      StreamingFullOuterJoin(spark, side(ds, "L"), side(ds, "R")).toDF(), netChangelog(_)),
+    ("left_outer_join", OutputMode.Append, ds =>
+      StreamingLeftOuterJoin(spark, side(ds, "L"), side(ds, "R")).toDF(), netChangelog(_)),
+    ("left_outer_join_update_before", OutputMode.Append, ds =>
+      StreamingLeftOuterJoin(spark, side(ds, "L"), side(ds, "R"),
+        updateBefore = true).toDF(), netChangelog(_)),
+    ("topn", OutputMode.Update, ds =>
+      StreamingTopN(spark, ds, n = 3).toDF(), latestRevision("key")),
+    ("topn_range", OutputMode.Update, ds =>
+      StreamingTopN(spark, ds, n = 3, startRank = 2).toDF(), latestRevision("key")),
+    ("dedup_keep_last", OutputMode.Update, ds =>
+      StreamingDedupKeepLast(spark, ds, byKind = true).toDF(),
+      latestRevision("key", "kind")))
+
   private def sorted(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
+
+  /** The changelog netted per (key, leftId, rightId): additions (+I,
+    * +U) count one, retractions (-D, -U) minus one; pairs that net to
+    * zero are left out. */
+  private def netChangelog(rows: Seq[Row]): Seq[String] =
+    rows.groupMapReduce(r => (r.getAs[Long]("key"), r.getAs[Long]("leftId"),
+        r.getAs[Long]("rightId")))(r =>
+        if (r.getAs[String]("_change_kind").startsWith("+")) 1 else -1)(_ + _)
+      .filter(_._2 != 0).map(_.toString).toSeq.sorted
+
+  /** The rows of each group's latest revision (its largest `emitSeq`),
+    * without `emitSeq`: how many revisions a group takes to get there
+    * depends on the batching. */
+  private def latestRevision(group: String*): Seq[Row] => Seq[String] = rows =>
+    rows.groupBy(r => group.map(r.getAs[Any])).values.toSeq.flatMap { g =>
+      val last = g.map(_.getAs[Long]("emitSeq")).max
+      g.filter(_.getAs[Long]("emitSeq") == last)
+        .map(r => r.toSeq.patch(r.fieldIndex("emitSeq"), Nil, 1).mkString("[", ",", "]"))
+    }.sorted
+
+  /** `build`'s output with the seeded input as one micro-batch, as
+    * micro-batches of three, and as micro-batches of three with a
+    * restart between them. */
+  private def threeWays(name: String, mode: OutputMode)(
+      build: Dataset[GEvent] => DataFrame): (Seq[Row], Seq[Row], Seq[Row]) = {
+    val whole = StreamHarness.run(Seq(events), mode, s"restart_${name}_whole")(build)
+      .collect().toSeq
+    val thirds = events.grouped(3).toSeq
+    val chunked = StreamHarness.run(thirds, mode, s"restart_${name}_chunked")(build)
+      .collect().toSeq
+    (whole, chunked, StreamHarness.runRestarting(thirds, mode)(build))
+  }
 
   test("the seeded input has out-of-order arrivals, tied timestamps and no late event") {
     val keyed = events.init
@@ -105,17 +165,40 @@ class StreamingRestartSpec extends AnyFunSuite {
 
   operators.foreach { case (name, build) =>
     test(s"$name emits the same rows in one batch, in batches of three and across restarts") {
-      val whole = sorted(StreamHarness.run(Seq(events), OutputMode.Append,
-        s"restart_${name}_whole")(build).collect().toSeq)
+      val (w, c, r) = threeWays(name, OutputMode.Append)(build)
+      val (whole, chunked, restarted) = (sorted(w), sorted(c), sorted(r))
       assert(whole.nonEmpty, s"$name emits nothing for the seeded input")
-      val thirds = events.grouped(3).toSeq
-      val chunked = sorted(StreamHarness.run(thirds, OutputMode.Append,
-        s"restart_${name}_chunked")(build).collect().toSeq)
       assert(chunked == whole,
         s"$name, batches of three:\nchunked=$chunked\nwhole=$whole\nevents=$events")
-      val restarted = sorted(StreamHarness.runRestarting(thirds)(build))
       assert(restarted == whole,
         s"$name, restarts:\nrestarted=$restarted\nwhole=$whole\nevents=$events")
     }
+  }
+
+  arrivalOperators.foreach { case (name, mode, build, fold) =>
+    test(s"$name folds to the same result in one batch, in batches of three and across restarts") {
+      val (w, c, r) = threeWays(name, mode)(build)
+      val (whole, chunked, restarted) = (fold(w), fold(c), fold(r))
+      assert(whole.nonEmpty, s"$name emits nothing for the seeded input")
+      assert(chunked == whole,
+        s"$name, batches of three:\nchunked=$chunked\nwhole=$whole\nevents=$events")
+      assert(restarted == whole,
+        s"$name, restarts:\nrestarted=$restarted\nwhole=$whole\nevents=$events")
+    }
+  }
+
+  // Across micro-batches the proc-time join follows arrival order by
+  // design, so one batch and batches of three may differ; a restart
+  // must not change what the same batches emit.
+  test("proc_time_join emits the same rows in batches of three with and without restarts") {
+    val build = (ds: Dataset[GEvent]) =>
+      StreamingProcTimeTemporalJoin(spark, side(ds, "L"), side(ds, "R")).toDF()
+    val thirds = events.grouped(3).toSeq
+    val chunked = sorted(StreamHarness.run(thirds, OutputMode.Append,
+      "restart_proc_time_join_chunked")(build).collect().toSeq)
+    assert(chunked.nonEmpty, "proc_time_join emits nothing for the seeded input")
+    val restarted = sorted(StreamHarness.runRestarting(thirds, OutputMode.Append)(build))
+    assert(restarted == chunked,
+      s"proc_time_join, restarts:\nrestarted=$restarted\nchunked=$chunked\nevents=$events")
   }
 }
